@@ -219,6 +219,21 @@ def test_banded_candidate_pairs_max_bucket(spark):
     assert full == B * (B - 1) // 2 + 1
 
 
+def test_simhash_across_arrow_batches(spark, dup_docs):
+    """The kernel's token-hash memo resets per Arrow batch; splitting
+    one partition into 2-row batches leaves every fingerprint as is."""
+    docs = dup_docs.coalesce(1)
+    want = sorted(dedupe.simhash_append(docs).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = sorted(dedupe.simhash_append(docs).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got == want and len(got) == 5
+
+
 def test_simhash_near_pairs(spark, dup_docs):
     fps = {r.doc_id: r.simhash for r in dedupe.simhash(dup_docs).collect()}
     assert fps[1] == fps[2]

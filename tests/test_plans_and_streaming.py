@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from website_to_agent_spark import fixtures, plans
@@ -19,25 +20,57 @@ def test_filter_pushdown_and_pruning(spark):
     assert schemas and set(schemas[0]) <= {"doc_id", "n_chars"}, schemas
 
 
-def test_frontier_pages_fetch_join_is_broadcast(spark, pages_df, site):
-    """The engine's fetch join must stream pages and broadcast the
-    frontier batch — a sort-merge fallback here would shuffle the whole
-    page store every superstep."""
+@pytest.mark.parametrize("user", ["fetch", "fetch_following", "snapshots"])
+def test_frontier_pages_fetch_join_is_broadcast(spark, pages_df, site, user):
+    """Every user of the engine's hit/miss join must stream the big
+    side and broadcast the frontier batch — a sort-merge fallback here
+    would shuffle the whole page store (or snapshot table) every
+    superstep. Hit and miss rows both come back."""
+    from website_to_agent_spark.operators import recrawl, redirects
     from website_to_agent_spark.operators.crawl import CrawlEngine
 
+    seed, missing = site.seeds[0], "https://missing/x"
     frontier = spark.createDataFrame(
-        [("j", site.seeds[0], 0, 0), ("j", "https://missing/x", 0, 1)],
+        [("j", seed, 0, 0), ("j", missing, 0, 1)],
         "job_id string, url string, depth int, ord long",
     )
     pages = pages_df.select("url", "html").withColumnRenamed("url", "p_url")
-    fetched = CrawlEngine._fetch(frontier, pages)
+    hit_col = "success"
+    if user == "fetch":
+        fetched = CrawlEngine._fetch(frontier, pages)
+    elif user == "fetch_following":
+        # the seed is fetched through a 301 alias; the missing url's
+        # chain ends on a url the store lacks
+        alias = "https://alias.example/seed"
+        store = fixtures.pages_rows_to_spark(spark, site.rows + [
+            fixtures.redirect_row(alias, seed),
+            fixtures.redirect_row(missing, "https://missing/none"),
+        ])
+        frontier = frontier.unionByName(spark.createDataFrame(
+            [("j", alias, 0, 2)], frontier.schema))
+        fetched = CrawlEngine(spark, store)._fetch_following(
+            frontier, pages, redirects.redirect_edges(store))
+    else:
+        crawled = spark.createDataFrame(
+            [(seed, True, "t", None, [], "x", "x", "x")],
+            "url string, success boolean, title string, description string,"
+            " keywords array<string>, text string, markdown string,"
+            " content string",
+        )
+        # a stored snapshot table, as a re-crawl reads it
+        snap = CrawlEngine._snapshot_columns(
+            recrawl.crawl_snapshots(crawled, pages_df).localCheckpoint())
+        fetched = CrawlEngine._attach_snapshots(
+            CrawlEngine._fetch(frontier, pages), snap)
+        hit_col = "_snap_digest"
     assert plans.has_broadcast_join(fetched)
     plan = plans.explain_str(fetched)
     assert "SortMergeJoin" not in plan
-    # semantics: hit + miss both present
-    rows = {(r.url, r.success) for r in fetched.collect()}
-    assert (site.seeds[0], True) in rows
-    assert ("https://missing/x", False) in rows
+    rows = {(r.url, r[hit_col] not in (None, False)) for r in fetched.collect()}
+    assert (seed, True) in rows
+    assert (missing, False) in rows
+    if user == "fetch_following":
+        assert ("https://alias.example/seed", True) in rows
 
 
 def test_bm25_no_python_udf(spark):

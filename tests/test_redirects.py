@@ -141,6 +141,28 @@ def test_seeder_mode_follows_redirects(spark, redirect_site):
     res.unpersist()
 
 
+def test_failed_chain_on_duplicate_src_edges_one_row(spark):
+    """A chain that fails on a url with several outgoing edges
+    (duplicate-src rows, e.g. two store snapshots of one redirect
+    page) still yields ONE row per input url, and the broadcast and
+    whole-store forms agree."""
+    edges = spark.createDataFrame(
+        [(f"{H}/a", f"{H}/b"), (f"{H}/b", f"{H}/c"), (f"{H}/b", f"{H}/c"),
+         (f"{H}/b", f"{H}/d")],
+        "src string, dst string",
+    )
+    urls = spark.createDataFrame([(f"{H}/a",), (f"{H}/z",)], "url string")
+    forms = [
+        sorted(tuple(r) for r in rd.resolve_redirects(
+            urls, edges, max_hops=1, broadcast_urls=bc).collect())
+        for bc in (True, False)
+    ]
+    assert forms[0] == forms[1] == [
+        (f"{H}/a", f"{H}/b", 1, False),
+        (f"{H}/z", f"{H}/z", 0, True),
+    ]
+
+
 def test_final_destinations_whole_store(spark, redirect_site):
     fin = {r.url: (r.final_url, r.redirect_ok)
            for r in rd.final_destinations(redirect_site).collect()}

@@ -76,6 +76,29 @@ def main() -> None:
         "superstep. Misses come from a second tiny broadcast anti-join.",
     )
 
+    # 2b. revalidation-snapshot attach — the same hit/miss join
+    from website_to_agent_spark.operators import recrawl
+
+    crawled = spark.createDataFrame(
+        [(site.seeds[0], True, "t", None, [], "x", "x", "x")],
+        "url string, success boolean, title string, description string,"
+        " keywords array<string>, text string, markdown string,"
+        " content string",
+    )
+    add(
+        "Fetched batch ⋈ revalidation snapshot attach",
+        CrawlEngine._attach_snapshots(
+            fetched,
+            CrawlEngine._snapshot_columns(
+                recrawl.crawl_snapshots(crawled, pages).localCheckpoint()
+            ),
+        ),
+        "`crawl.hit_miss_join` again: the fetched batch is broadcast "
+        "against the corpus-scale snapshot table, which streams; the "
+        "batch rows without a snapshot come from a broadcast anti-join "
+        "against the hit keys, with typed-null `_snap_*` columns.",
+    )
+
     # 3. filter pushdown proof
     filt = docs.filter(F.col("doc_id") < 10).select("doc_id", "n_chars")
     add(

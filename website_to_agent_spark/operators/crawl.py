@@ -31,9 +31,11 @@ Scale notes (100 TB / 10^10-frontier design):
 - Everything is keyed by ``job_id`` — one engine run drives millions of
   independent crawl jobs; all windows are per-job, so parallelism is
   across jobs and pages, never a global sort.
-- The frontier⋈pages join broadcasts the (small) drained frontier batch
-  against the huge pages table; on a cluster the pages table is
-  bucketed by url hash so the probe is partition-pruned.
+- The frontier⋈pages join (and the revalidation-snapshot attach) is
+  ``hit_miss_join``: the (small) drained frontier batch is broadcast
+  against the huge pages table, which streams and never shuffles; on a
+  cluster the pages table is bucketed by url hash so the probe is
+  partition-pruned.
 - Per-superstep state is checkpointed through ``SnapshotCatalog``
   (atomic manifest commit) and re-read, truncating lineage — killed
   jobs resume exactly (T5).
@@ -47,6 +49,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional
 from urllib.parse import urlparse
 
@@ -58,7 +61,8 @@ from website_to_agent_spark.functions import urlfns
 from website_to_agent_spark.functions.extract import (
     banner,
     extract_udf,
-    format_content_markdown,
+    format_content,
+    seeder_links_meta_udf,
     seeder_links_udf,
 )
 from website_to_agent_spark.operators import filters
@@ -95,6 +99,87 @@ def _release_checkpoint(df: Optional[DataFrame], blocking: bool = False) -> None
         df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
     except Exception:
         pass
+
+
+# The superstep bundle's payload: the CRAWLED text columns, the page's
+# out-links (the link DB a re-crawl replays) and its robots meta
+# directives. A revalidation snapshot stores the same fields plus the
+# digest validator, each renamed ``_snap_<field>`` on the batch.
+_TEXT_FIELDS = ("title", "description", "keywords", "text", "markdown",
+                "content")
+_META_FIELDS = ("robots_noindex", "robots_nofollow", "nofollow_links")
+_PAYLOAD_FIELDS = _TEXT_FIELDS + ("links",) + _META_FIELDS
+_PAYLOAD_TYPES = {
+    f.name: f.dataType
+    for f in schema.EXTRACTED.fields + schema.CRAWLED.fields
+}
+_SNAP_FIELDS = ("digest",) + _PAYLOAD_FIELDS
+# store-fetch flags: True on a hit, False on a miss
+_FETCH_FLAGS = ("success", "html_ok")
+_URL_STEP_DDL = "job_id string, url string, superstep int"
+
+
+def _miss_columns(big: DataFrame, big_key: str, flags=()) -> list:
+    """What a :func:`hit_miss_join` miss carries instead of ``big``'s
+    columns: a typed null for each (the key excepted, it is dropped),
+    and False for each flag."""
+    return [
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in big.schema.fields
+        if f.name != big_key
+    ] + [F.lit(False).alias(c) for c in flags]
+
+
+def hit_miss_join(
+    small: DataFrame,
+    big: DataFrame,
+    small_key: str,
+    big_key: str,
+    keys: Optional[DataFrame] = None,
+    flags=(),
+) -> DataFrame:
+    """Left-attach the columns of the store-scale ``big`` to the
+    batch-bounded ``small`` (rows keyed by ``(job_id, url)``) where
+    ``small[small_key] == big[big_key]``.
+
+    A LEFT join preserving the small side cannot broadcast its
+    preserved side — Spark would fall back to a sort-merge join and
+    SHUFFLE ALL OF ``big`` every superstep. Instead: a broadcast-INNER
+    join for the hits (``big`` streamed, never shuffled), then a
+    broadcast anti-join of ``small`` against the hit keys for the
+    misses, whose ``big`` columns are typed nulls from ``big``'s
+    schema. ``keys`` is a (``big_key``)-only frame for the hit-key
+    probe (default ``big.select(big_key)``); pass a slim materialized
+    copy when ``big`` cannot column-prune. The key column is dropped
+    from the result; each ``flags`` column is True on hits and False
+    on misses.
+    """
+    keys = big.select(big_key) if keys is None else keys
+    hits = (
+        F.broadcast(small)
+        .join(big, small[small_key] == big[big_key], "inner")
+        .drop(big_key)
+        .select("*", *[F.lit(True).alias(c) for c in flags])
+    )
+    hit_keys = (
+        F.broadcast(small)
+        .join(keys, small[small_key] == keys[big_key], "inner")
+        .select(F.col("job_id").alias("_hk_job"),
+                F.col("url").alias("_hk_url"))
+    )
+    misses = small.join(
+        F.broadcast(hit_keys),
+        (small.job_id == F.col("_hk_job")) & (small.url == F.col("_hk_url")),
+        "left_anti",
+    ).select("*", *_miss_columns(big, big_key, flags))
+    return hits.unionByName(misses)
+
+
+def _union_all(spark: SparkSession, schema_, parts: list) -> DataFrame:
+    """``parts`` stacked by column name onto an empty ``schema_`` frame
+    (so a run that produced no parts still returns a typed table)."""
+    return reduce(DataFrame.unionByName, parts,
+                  spark.createDataFrame([], schema_))
 
 
 @dataclass
@@ -296,6 +381,14 @@ class CrawlEngine:
         # records every followed/failed chain (never silent).
         self.follow_redirects = follow_redirects
         self.redirect_max_hops = redirect_max_hops
+        # the chain columns every bundle row carries when redirects
+        # are followed
+        self._redir_cols = (
+            ["final_url", "n_hops", "redirect_ok"]
+            if follow_redirects and pages is not None
+            and "redirect_to" in pages.columns
+            else []
+        )
         # CONDITIONAL REVALIDATION (If-None-Match → 304, see
         # operators/recrawl.revalidate): a snapshot table from a prior
         # crawl of the same store — (url, digest, title, description,
@@ -332,41 +425,30 @@ class CrawlEngine:
 
     # ---------------------------------------------------------------- init
     def _init_state(self, jobs: list[CrawlJob]):
-        spark = self.spark
-        frontier = spark.createDataFrame(
-            [(j.job_id, j.seed_url, 0, 0) for j in jobs],
-            "job_id string, url string, depth int, ord long",
+        """The step-0 frontier and seen set: each job's seed url."""
+        seeds = [(j.job_id, j.seed_url, 0, 0) for j in jobs]
+        frontier = self.spark.createDataFrame(
+            seeds, "job_id string, url string, depth int, ord long"
         )
-        seen = spark.createDataFrame(
-            [(j.job_id, j.seed_url, 0, 0) for j in jobs],
-            "job_id string, url string, ord long, depth int",
+        seen = self.spark.createDataFrame(
+            seeds, "job_id string, url string, ord long, depth int"
         )
-        # seeder counts the seed itself against the discovered budget
-        # (`url_seeder.py:51`); the client budget counts successes only.
-        init_budget = 1 if self.mode == "seeder" else 0
-        job_state = spark.createDataFrame(
-            [
-                (
-                    j.job_id,
-                    init_budget,
-                    1,
-                    j.max_urls,
-                    j.max_depth if j.max_depth is not None else -1,
-                    j.base_domain,
-                )
-                for j in jobs
-            ],
-            "job_id string, budget_used long, next_ord long, max_urls long,"
-            " max_depth int, base_domain string",
-        )
-        crawled = spark.createDataFrame([], schema.CRAWLED)
-        metrics = spark.createDataFrame([], schema.METRICS)
-        return frontier, seen, crawled, metrics, job_state
+        return frontier, seen
 
-    _JOB_STATE_DDL = (
-        "job_id string, budget_used long, next_ord long, max_urls long,"
-        " max_depth int, base_domain string"
-    )
+    def _fresh_job_state(self, jobs: list[CrawlJob]) -> dict:
+        """The driver-side job-state dict at step 0: job_id →
+        [budget_used, next_ord, max_urls, max_depth, base_domain], the
+        ``schema.JOB_STATE`` columns after job_id. The seeder counts
+        the seed itself against the discovered budget
+        (`url_seeder.py:51`); the client budget counts successes
+        only."""
+        init_budget = 1 if self.mode == "seeder" else 0
+        return {
+            j.job_id: [init_budget, 1, j.max_urls,
+                       j.max_depth if j.max_depth is not None else -1,
+                       j.base_domain]
+            for j in jobs
+        }
 
     def _job_state_df(self, js: dict) -> DataFrame:
         """Materialize the driver-side job-state dict (one short row
@@ -377,7 +459,25 @@ class CrawlEngine:
         return self.spark.createDataFrame(
             [(k, int(v[0]), int(v[1]), int(v[2]), int(v[3]), v[4])
              for k, v in js.items()],
-            self._JOB_STATE_DDL,
+            schema.JOB_STATE,
+        )
+
+    @staticmethod
+    def _snapshot_columns(rw: DataFrame) -> DataFrame:
+        """A revalidation snapshot (``recrawl.crawl_snapshots``) keyed
+        ``_su``, its validator and payload renamed ``_snap_<field>`` out
+        of the way of the batch/page columns. Snapshots without the
+        meta-robots columns read as carrying no directives."""
+        return rw.select(
+            F.col("url").alias("_su"),
+            *[
+                (
+                    F.lit(None).cast(_PAYLOAD_TYPES[f])
+                    if f in _META_FIELDS and f not in rw.columns
+                    else F.col(f)
+                ).alias("_snap_" + f)
+                for f in _SNAP_FIELDS
+            ],
         )
 
     # ---------------------------------------------------------------- run
@@ -401,60 +501,44 @@ class CrawlEngine:
         # exactly (fresh start: the seeds; steps without drain
         # leftover: the enqueue counts); None = probe before draining
         frontier_counts = None
-        if resume and self.catalog is not None:
-            latest = self.catalog.latest_superstep()
-            if latest is not None:
-                frontier = self.catalog.read(spark, latest, "frontier")
-                job_state = self.catalog.read(spark, latest, "job_state")
-                js = {
-                    r.job_id: [r.budget_used, r.next_ord, r.max_urls,
-                               r.max_depth, r.base_domain]
-                    for r in job_state.collect()
-                }
-                # crawled/metrics/seen are append-only deltas — one per
-                # step; seen step-0 base = the seed rows (rebuilt from
-                # the jobs list, identical to the original init). A
-                # compaction snapshot (catalog.compact) replaces the
-                # covered prefix with ONE base read, so resume cost is
-                # O(tail), not O(total supersteps).
-                _, seen, _, _, _ = self._init_state(jobs)
-                base = self.catalog.latest_compaction()
-                first_k = 0
-                if base is not None and base <= latest:
-                    crawled_parts.append(
-                        self.catalog.read_compacted(spark, base, "crawled_delta")
-                    )
-                    metrics_parts.append(
-                        self.catalog.read_compacted(spark, base, "metrics_delta")
-                    )
-                    seen = seen.unionByName(
-                        self.catalog.read_compacted(spark, base, "seen_delta")
-                    )
-                    first_k = base + 1
-                for k in range(first_k, latest + 1):
-                    crawled_parts.append(
-                        self.catalog.read(spark, k, "crawled_delta")
-                    )
-                    metrics_parts.append(
-                        self.catalog.read(spark, k, "metrics_delta")
-                    )
-                    seen = seen.unionByName(
-                        self.catalog.read(spark, k, "seen_delta")
-                    )
-                crawled = metrics = None  # unused in delta mode
-                start_step = latest + 1
-            else:
-                frontier, seen, crawled, metrics, job_state = self._init_state(jobs)
-        else:
-            frontier, seen, crawled, metrics, job_state = self._init_state(jobs)
-        if not js:
-            init_budget = 1 if self.mode == "seeder" else 0
+        frontier, seen = self._init_state(jobs)
+        latest = (
+            self.catalog.latest_superstep()
+            if resume and self.catalog is not None
+            else None
+        )
+        if latest is not None:
+            frontier = self.catalog.read(spark, latest, "frontier")
             js = {
-                j.job_id: [init_budget, 1, j.max_urls,
-                           j.max_depth if j.max_depth is not None else -1,
-                           j.base_domain]
-                for j in jobs
+                r.job_id: [r[f.name] for f in schema.JOB_STATE.fields[1:]]
+                for r in self.catalog.read(spark, latest, "job_state").collect()
             }
+            # crawled/metrics/seen are append-only deltas — one per
+            # step; seen step-0 base = the seed rows (rebuilt from the
+            # jobs list, identical to the original init). A compaction
+            # snapshot (catalog.compact) replaces the covered prefix
+            # with ONE base read, so resume cost is O(tail), not
+            # O(total supersteps).
+            base = self.catalog.latest_compaction()
+            first_k = 0
+            if base is not None and base <= latest:
+                crawled_parts.append(
+                    self.catalog.read_compacted(spark, base, "crawled_delta")
+                )
+                metrics_parts.append(
+                    self.catalog.read_compacted(spark, base, "metrics_delta")
+                )
+                seen = seen.unionByName(
+                    self.catalog.read_compacted(spark, base, "seen_delta")
+                )
+                first_k = base + 1
+            for k in range(first_k, latest + 1):
+                crawled_parts.append(self.catalog.read(spark, k, "crawled_delta"))
+                metrics_parts.append(self.catalog.read(spark, k, "metrics_delta"))
+                seen = seen.unionByName(self.catalog.read(spark, k, "seen_delta"))
+            start_step = latest + 1
+        if not js:
+            js = self._fresh_job_state(jobs)
             if start_step == 0:
                 frontier_counts = {j.job_id: 1 for j in jobs}
 
@@ -464,7 +548,7 @@ class CrawlEngine:
             else None
         )
         # r6: slim url-only copy of the page store for KEY-side probes
-        # (the hit_keys broadcast build in _fetch/_fetch_following).
+        # (the hit-key broadcast build of the fetch's hit_miss_join).
         # The store is routinely a checkpointed/ExistingRDD frame, and
         # those scans cannot column-prune — deriving hit keys from the
         # fat table deserialized every html payload once more per
@@ -480,11 +564,7 @@ class CrawlEngine:
         # crawl (a small fraction of rows), probed per superstep by
         # broadcast joins of the batch — see _fetch_following.
         redirect_edges_df: Optional[DataFrame] = None
-        if (
-            self.follow_redirects
-            and self.pages is not None
-            and "redirect_to" in self.pages.columns
-        ):
+        if self._redir_cols:
             from website_to_agent_spark.operators import (
                 redirects as redirects_mod,
             )
@@ -493,8 +573,7 @@ class CrawlEngine:
                 self.pages
             ).localCheckpoint(eager=True)
         redirect_parts: list[DataFrame] = []
-        # revalidation snapshot columns, renamed out of the way of the
-        # batch/page columns (client mode only — the seeder extracts
+        # revalidation snapshot (client mode only — the seeder extracts
         # nothing, so there is nothing to reuse)
         snap: Optional[DataFrame] = None
         if (
@@ -502,36 +581,22 @@ class CrawlEngine:
             and self.pages is not None
             and self.mode == "client"
         ):
-            rw = self.revalidate_with
-            _empty_sarr = F.array().cast("array<string>")
-            snap = rw.select(
-                F.col("url").alias("_su"),
-                F.col("digest").alias("_snap_digest"),
-                F.col("title").alias("_snap_title"),
-                F.col("description").alias("_snap_description"),
-                F.col("keywords").alias("_snap_keywords"),
-                F.col("text").alias("_snap_text"),
-                F.col("markdown").alias("_snap_markdown"),
-                F.col("content").alias("_snap_content"),
-                F.col("links").alias("_snap_links"),
-                (
-                    F.col("robots_noindex")
-                    if "robots_noindex" in rw.columns
-                    else F.lit(False)
-                ).alias("_snap_noindex"),
-                (
-                    F.col("robots_nofollow")
-                    if "robots_nofollow" in rw.columns
-                    else F.lit(False)
-                ).alias("_snap_nofollow"),
-                (
-                    F.col("nofollow_links")
-                    if "nofollow_links" in rw.columns
-                    else _empty_sarr
-                ).alias("_snap_nflinks"),
-            )
+            snap = self._snapshot_columns(self.revalidate_with)
         reval_parts: list[DataFrame] = []
         noindex_parts: list[DataFrame] = []
+        # the mode's superstep: its bundle builder, its link predicate
+        # over (url, base_domain), and the per-job stat that spends
+        # budget (client: successes; seeder: enqueues)
+        if self.mode == "client":
+            step_bundle, link_ok, budget_key = (
+                self._client_step, filters.client_link_ok, "n_parsed",
+            )
+        else:
+            step_bundle, link_ok, budget_key = (
+                self._seeder_step,
+                lambda u, d: filters.seeder_link_ok(u, F.lower(d)),
+                "n_enq",
+            )
 
         step = start_step
         blooms: Optional[DataFrame] = None
@@ -697,15 +762,12 @@ class CrawlEngine:
             if pages is not None and leftover is not None:
                 batch = batch.persist()
                 fetch_caches.append(batch)
-            if pages is not None:
-                if redirect_edges_df is not None:
-                    fetched = self._fetch_following(
-                        batch, pages, redirect_edges_df,
-                        pages_urls=pages_urls,
-                    )
-                else:
-                    fetched = self._fetch(batch, pages,
-                                          pages_urls=pages_urls)
+            if redirect_edges_df is not None:
+                fetched = self._fetch_following(
+                    batch, pages, redirect_edges_df, pages_urls
+                )
+            elif pages is not None:
+                fetched = self._fetch(batch, pages, pages_urls)
             else:
                 fetched = self._fetch_live(batch)
             if snap is not None:
@@ -716,14 +778,20 @@ class CrawlEngine:
             # frontier, seen) derives from it, so the Arrow extract
             # kernel runs exactly once per page per superstep instead of
             # once per derived state table.
-            if self.mode == "client":
-                new_crawled, candidates, per_job, bundle = self._client_step(
-                    fetched, step
-                )
-            else:
-                new_crawled, candidates, per_job, bundle = self._seeder_step(
-                    fetched, step
-                )
+            bundle = step_bundle(fetched, step)
+            new_crawled = bundle.select(
+                *[f.name for f in schema.CRAWLED.fields]
+            )
+            candidates = self._candidates(bundle, link_ok)
+            per_job = bundle.groupBy("job_id").agg(
+                F.count("*").alias("n_fetched"),
+                F.sum(F.col("success").cast("long")).alias("n_parsed"),
+                F.sum((~F.col("success")).cast("long")).alias("n_failed"),
+                F.sum(F.size(F.coalesce(F.col("links"), F.array())))
+                .alias("n_links"),
+                F.sum(F.length(F.coalesce(F.col("text"), F.lit(""))))
+                .alias("n_bytes"),
+            )
             _t_bundle = time.time()
             _j_bundle = _jid()
 
@@ -734,7 +802,7 @@ class CrawlEngine:
             # them (Heritrix/Nutch final-url dedup semantics; the
             # reference's exact-url client would refetch).
             redir_finals = None
-            if redirect_edges_df is not None and "final_url" in bundle.columns:
+            if redirect_edges_df is not None:
                 redir_finals = (
                     bundle.filter(
                         F.col("success")
@@ -998,7 +1066,6 @@ class CrawlEngine:
             stat_rows = (
                 per_job.join(enq_stats, "job_id", "full_outer").collect()
             )
-            budget_key = "n_budget" if self.mode == "client" else "n_enq"
             for r in stat_rows:
                 v = js.get(r["job_id"])
                 if v is None:
@@ -1035,7 +1102,7 @@ class CrawlEngine:
                     "left_anti",
                 )
                 seen_delta = seen_delta.unionByName(redir_seen)
-            if snap is not None and "reused" in bundle.columns:
+            if snap is not None:
                 _reval = (
                     bundle.filter(F.col("reused"))
                     .select("job_id", "url", "superstep")
@@ -1043,10 +1110,7 @@ class CrawlEngine:
                 )
                 reval_parts.append(_reval)
                 retained.append(_reval)
-            if (
-                self.honor_meta_robots
-                and "robots_noindex" in bundle.columns
-            ):
+            if self.honor_meta_robots:
                 _noidx = (
                     bundle.filter(F.col("robots_noindex"))
                     .select("job_id", "url", "superstep")
@@ -1188,15 +1252,7 @@ class CrawlEngine:
                 )
             step += 1
 
-        empty_crawled = spark.createDataFrame([], schema.CRAWLED)
-        empty_metrics = spark.createDataFrame([], schema.METRICS)
-        crawled = empty_crawled
-        for part in crawled_parts:
-            crawled = crawled.unionByName(part)
-        metrics = empty_metrics
-        for part in metrics_parts:
-            metrics = metrics.unionByName(part)
-
+        crawled = _union_all(spark, schema.CRAWLED, crawled_parts)
         # dense fetch order per job (the reference's pop counter)
         w_fetch = Window.partitionBy("job_id").orderBy("ord")
         crawled = crawled.withColumn("fetch_ord", F.row_number().over(w_fetch) - 1)
@@ -1215,42 +1271,28 @@ class CrawlEngine:
         # pending_release — hand those over too (releasing the parent
         # of a never-run lazy checkpoint is safe: nothing computes it)
         retained.extend(pending_release)
-        trap_drops = None
-        if self.trap_max_urls is not None:
-            trap_drops = spark.createDataFrame(
-                [], "job_id string, host string, template string,"
-                    " dropped long, superstep int",
-            )
-            for part in trap_drop_parts:
-                trap_drops = trap_drops.unionByName(part)
-        redirects_tbl = None
-        if redirect_edges_df is not None:
-            redirects_tbl = spark.createDataFrame(
-                [], "job_id string, url string, final_url string,"
-                    " n_hops int, redirect_ok boolean, superstep int",
-            )
-            for part in redirect_parts:
-                redirects_tbl = redirects_tbl.unionByName(part)
-        revalidated_tbl = None
-        if snap is not None:
-            revalidated_tbl = spark.createDataFrame(
-                [], "job_id string, url string, superstep int",
-            )
-            for part in reval_parts:
-                revalidated_tbl = revalidated_tbl.unionByName(part)
-        noindexed_tbl = None
-        if self.honor_meta_robots:
-            noindexed_tbl = spark.createDataFrame(
-                [], "job_id string, url string, superstep int",
-            )
-            for part in noindex_parts:
-                noindexed_tbl = noindexed_tbl.unionByName(part)
         return CrawlResultTables(
-            crawled=crawled, seen=seen, metrics=metrics,
+            crawled=crawled, seen=seen,
+            metrics=_union_all(spark, schema.METRICS, metrics_parts),
             supersteps=step - start_step, job_state=self._job_state_df(js),
-            checkpoints=retained, trap_drops=trap_drops,
-            redirects=redirects_tbl, revalidated=revalidated_tbl,
-            noindexed=noindexed_tbl, opic=opic_cash,
+            checkpoints=retained,
+            trap_drops=_union_all(
+                spark,
+                "job_id string, host string, template string,"
+                " dropped long, superstep int",
+                trap_drop_parts,
+            ) if self.trap_max_urls is not None else None,
+            redirects=_union_all(
+                spark,
+                "job_id string, url string, final_url string,"
+                " n_hops int, redirect_ok boolean, superstep int",
+                redirect_parts,
+            ) if redirect_edges_df is not None else None,
+            revalidated=_union_all(spark, _URL_STEP_DDL, reval_parts)
+            if snap is not None else None,
+            noindexed=_union_all(spark, _URL_STEP_DDL, noindex_parts)
+            if self.honor_meta_robots else None,
+            opic=opic_cash,
         )
 
     # ------------------------------------------------------------ scores
@@ -1285,54 +1327,22 @@ class CrawlEngine:
     # -------------------------------------------------------------- fetch
     @staticmethod
     def _fetch(batch: DataFrame, pages: DataFrame,
-               pages_urls: Optional[DataFrame] = None) -> DataFrame:
-        """Fetch = lookup html for the drained batch in the page store.
+               pages_urls: Optional[DataFrame] = None,
+               key: str = "url") -> DataFrame:
+        """Fetch = look up html for the drained batch in the page store
+        (``p_url``, ``html``) with :func:`hit_miss_join`; misses are
+        fetch failures (`crawl4ai_client.py:142`). ``key`` names the
+        batch column holding the url to fetch.
 
-        A LEFT join preserving the (small) batch cannot broadcast its
-        preserved side — Spark would silently fall back to a sort-merge
-        join and SHUFFLE THE ENTIRE PAGES TABLE each superstep. Instead:
-        broadcast-INNER join for hits (pages streamed, never shuffled),
-        then a tiny broadcast anti-join of the batch against the hit
-        keys for the misses (fetch failures, `crawl4ai_client.py:142`).
-
-        ``pages_urls`` (r6): slim (p_url) copy of the store. The
-        hit-keys broadcast build otherwise re-streams the FAT store —
-        checkpointed stores are ExistingRDD scans with no column
-        pruning, so that second stream deserializes every html payload
-        again. A batch row's url is in the slim copy iff it is in the
-        store, so the key set is identical.
+        ``pages_urls`` (r6): slim (p_url) copy of the store for the
+        hit-key probe (default ``pages.select("p_url")``). Checkpointed
+        stores are ExistingRDD scans with no column pruning, so a probe
+        of the fat store deserializes every html payload again; a batch
+        url is in the slim copy iff it is in the store, so the key set
+        is identical.
         """
-        hits = (
-            F.broadcast(batch)
-            .join(pages, batch.url == pages.p_url, "inner")
-            .withColumn("success", F.lit(True))
-            .withColumn("html_ok", F.lit(True))
-        )
-        if pages_urls is not None:
-            hit_keys = (
-                F.broadcast(batch)
-                .join(pages_urls, batch.url == pages_urls.p_url, "inner")
-                .select(F.col("job_id").alias("h_job_id"),
-                        F.col("url").alias("h_url"))
-            )
-        else:
-            hit_keys = hits.select(
-                F.col("job_id").alias("h_job_id"),
-                F.col("url").alias("h_url"),
-            )
-        misses = (
-            batch.join(
-                F.broadcast(hit_keys),
-                (batch.job_id == F.col("h_job_id"))
-                & (batch.url == F.col("h_url")),
-                "left_anti",
-            )
-            .withColumn("p_url", F.lit(None).cast("string"))
-            .withColumn("html", F.lit(None).cast("binary"))
-            .withColumn("success", F.lit(False))
-            .withColumn("html_ok", F.lit(False))
-        )
-        return hits.unionByName(misses)
+        return hit_miss_join(batch, pages, key, "p_url", keys=pages_urls,
+                             flags=_FETCH_FLAGS)
 
     def _fetch_following(
         self, batch: DataFrame, pages: DataFrame, edges: DataFrame,
@@ -1340,10 +1350,9 @@ class CrawlEngine:
     ) -> DataFrame:
         """Redirect-aware store fetch: resolve each batch url's chain
         (operators/redirects.py — max_hops rounds of broadcast probes
-        against the edge table), then fetch the FINAL url's content
-        with the same broadcast-inner + anti hit/miss pattern as
-        ``_fetch``. Unresolved chains (loop / too many hops) are
-        forced failures, like requests' TooManyRedirects. Adds
+        against the edge table), then ``_fetch`` the FINAL url.
+        Unresolved chains (loop / too many hops) are forced failures,
+        like requests' TooManyRedirects. Adds
         ``final_url``/``n_hops``/``redirect_ok`` columns — downstream
         steps use them for the extraction base url, the seen-set
         delta, and the redirects result table."""
@@ -1353,81 +1362,20 @@ class CrawlEngine:
             batch.select("url"), edges, max_hops=self.redirect_max_hops
         )
         b = batch.join(F.broadcast(res), "url", "left")
-        okb = b.filter(F.col("redirect_ok"))
-        badb = b.filter(~F.col("redirect_ok"))
-        hits = (
-            F.broadcast(okb)
-            .join(pages, okb.final_url == pages.p_url, "inner")
-            .withColumn("success", F.lit(True))
-            .withColumn("html_ok", F.lit(True))
+        too_many = b.filter(~F.col("redirect_ok")).select(
+            "*", *_miss_columns(pages, "p_url", _FETCH_FLAGS)
         )
-        # slim key-side probe — see _fetch
-        if pages_urls is not None:
-            hit_keys = (
-                F.broadcast(okb)
-                .join(pages_urls, okb.final_url == pages_urls.p_url,
-                      "inner")
-                .select(F.col("job_id").alias("h_job_id"),
-                        F.col("url").alias("h_url"))
-            )
-        else:
-            hit_keys = hits.select(
-                F.col("job_id").alias("h_job_id"),
-                F.col("url").alias("h_url"),
-            )
-        null_cols = [
-            F.lit(None).cast("string").alias("p_url"),
-            F.lit(None).cast("binary").alias("html"),
-            F.lit(False).alias("success"),
-            F.lit(False).alias("html_ok"),
-        ]
-        misses = okb.join(
-            F.broadcast(hit_keys),
-            (okb.job_id == F.col("h_job_id")) & (okb.url == F.col("h_url")),
-            "left_anti",
-        ).select("*", *null_cols)
-        too_many = badb.select("*", *null_cols)
-        return hits.unionByName(misses).unionByName(too_many)
+        return self._fetch(
+            b.filter(F.col("redirect_ok")), pages, pages_urls,
+            key="final_url",
+        ).unionByName(too_many)
 
     @staticmethod
     def _attach_snapshots(fetched: DataFrame, snap: DataFrame) -> DataFrame:
-        """Left-attach the prior-crawl snapshot columns to the fetched
-        batch with the same broadcast-inner + anti pattern as
-        ``_fetch`` (the snapshot table is corpus-scale — a plain left
-        join preserving the small batch would shuffle it whole)."""
-        hits = (
-            F.broadcast(fetched)
-            .join(snap, fetched.url == F.col("_su"), "inner")
-            .drop("_su")
-        )
-        hit_keys = hits.select(
-            F.col("job_id").alias("h2_job_id"), F.col("url").alias("h2_url")
-        )
-        missing = (
-            fetched.join(
-                F.broadcast(hit_keys),
-                (fetched.job_id == F.col("h2_job_id"))
-                & (fetched.url == F.col("h2_url")),
-                "left_anti",
-            )
-            .withColumn("_snap_digest", F.lit(None).cast("string"))
-            .withColumn("_snap_title", F.lit(None).cast("string"))
-            .withColumn("_snap_description", F.lit(None).cast("string"))
-            .withColumn("_snap_keywords",
-                        F.lit(None).cast("array<string>"))
-            .withColumn("_snap_text", F.lit(None).cast("string"))
-            .withColumn("_snap_markdown", F.lit(None).cast("string"))
-            .withColumn("_snap_content", F.lit(None).cast("string"))
-            .withColumn(
-                "_snap_links",
-                F.lit(None).cast(schema.T.ArrayType(schema.LINK)),
-            )
-            .withColumn("_snap_noindex", F.lit(False))
-            .withColumn("_snap_nofollow", F.lit(False))
-            .withColumn("_snap_nflinks",
-                        F.array().cast("array<string>"))
-        )
-        return hits.unionByName(missing)
+        """Left-attach the prior-crawl snapshot columns
+        (``_snapshot_columns``) to the fetched batch with
+        :func:`hit_miss_join` — the snapshot table is corpus-scale."""
+        return hit_miss_join(fetched, snap, "url", "_su")
 
     def _fetch_live(self, batch: DataFrame) -> DataFrame:
         """Live-mode fetch: the drained batch goes through the
@@ -1468,9 +1416,95 @@ class CrawlEngine:
             .drop("_ok")
         )
 
+    # ------------------------------------------------------------- bundle
+    def _bundle(self, rows: DataFrame, step: int, payload: dict,
+                discover, reused: bool) -> DataFrame:
+        """The superstep bundle rows of ``rows``: the CRAWLED columns,
+        the out-links, the ``discover`` gate, the redirect chain
+        columns (when followed) and the ``reused`` flag, plus
+        ``robots_noindex``/``nofollow_links`` under honor_meta_robots.
+
+        ``payload`` maps ``_PAYLOAD_FIELDS`` names to columns (``ext.*``,
+        ``_snap_*``, a seeder kernel's output); an absent field is a
+        typed null. Page-level nofollow turns discovery off."""
+        def val(name):
+            c = payload.get(name)
+            return F.lit(None).cast(_PAYLOAD_TYPES[name]) if c is None else c
+
+        meta = []
+        if self.honor_meta_robots:
+            discover = discover & ~F.coalesce(val("robots_nofollow"),
+                                              F.lit(False))
+            meta = [
+                F.coalesce(val("robots_noindex"), F.lit(False))
+                .alias("robots_noindex"),
+                F.coalesce(val("nofollow_links"),
+                           F.array().cast("array<string>"))
+                .alias("nofollow_links"),
+            ]
+        return rows.select(
+            "job_id", "url", "ord", "depth",
+            F.lit(None).cast("long").alias("fetch_ord"),
+            "success",
+            *[val(c).alias(c) for c in _TEXT_FIELDS],
+            F.lit(step).alias("superstep"),
+            val("links").alias("links"),
+            discover.alias("discover"),
+            "base_domain",
+            *self._redir_cols,
+            F.lit(reused).alias("reused"),
+            *meta,
+        )
+
+    def _base_url(self):
+        """The url links resolve against: after a followed redirect,
+        the FINAL url (the base every client uses)."""
+        if self._redir_cols:
+            return F.coalesce(F.col("final_url"), F.col("url"))
+        return F.col("url")
+
+    def _candidates(self, bundle: DataFrame, link_ok) -> DataFrame:
+        """Enqueue candidates ``(job_id, url, parent_ord, pos, depth)``:
+        the out-links of every discovering bundle row that pass
+        ``link_ok(url, base_domain)`` — and, under honor_meta_robots,
+        are not rel=nofollow anchors of their page (per-row array
+        membership — no join, the list rides the bundle)."""
+        nf_cols = ["nofollow_links"] if self.honor_meta_robots else []
+        candidates = (
+            bundle.filter(F.col("discover"))
+            .select(
+                "job_id",
+                F.col("ord").alias("parent_ord"),
+                (F.col("depth") + 1).alias("depth"),
+                "base_domain",
+                *nf_cols,
+                F.posexplode_outer("links").alias("_i", "link"),
+            )
+            .select(
+                "job_id",
+                F.col("link.url").alias("url"),
+                "parent_ord",
+                F.col("link.pos").alias("pos"),
+                "depth",
+                "base_domain",
+                *nf_cols,
+            )
+            .filter(F.col("url").isNotNull())
+            .filter(link_ok(F.col("url"), F.col("base_domain")))
+            .drop("base_domain")
+        )
+        if self.honor_meta_robots:
+            candidates = candidates.filter(
+                ~F.coalesce(
+                    F.array_contains(F.col("nofollow_links"), F.col("url")),
+                    F.lit(False),
+                )
+            ).drop("nofollow_links")
+        return candidates
+
     # ------------------------------------------------------------- client
-    def _client_step(self, fetched: DataFrame, step: int):
-        """One client-mode superstep over the fetched batch.
+    def _client_step(self, fetched: DataFrame, step: int) -> DataFrame:
+        """One client-mode superstep bundle over the fetched batch.
 
         Budget gate (`crawl4ai_client.py:219,241`): a row is *popped*
         (recorded) iff successes before it (per job, FIFO order) leave
@@ -1506,18 +1540,6 @@ class CrawlEngine:
             .filter(F.col("popped"))
         )
 
-        # Extraction only for successful fetches (filter before the UDF
-        # so Catalyst prunes its input). After a followed redirect the
-        # FINAL url is the base every client resolves links against.
-        redirected = "final_url" in fetched.columns
-        base_url = (
-            F.coalesce(F.col("final_url"), F.col("url"))
-            if redirected
-            else F.col("url")
-        )
-        redir_cols = (
-            ["final_url", "n_hops", "redirect_ok"] if redirected else []
-        )
         # 304-style reuse: digest-unchanged rows never enter the Arrow
         # extraction kernel; the digest check itself is one column md5
         # inside codegen (see revalidate_with in __init__).
@@ -1546,185 +1568,48 @@ class CrawlEngine:
         # branch then reads the cached partitions and the only work
         # left downstream is the extraction kernel + projections.
         # Released right after the bundle checkpoint materializes.
-        gated = gated.drop(
-            "succ_before", "popped", "p_url"
-        ).localCheckpoint(eager=True)
+        gated = gated.drop("succ_before", "popped").localCheckpoint(eager=True)
+        # Extraction only for successful, non-reused fetches (filter
+        # before the UDF so Catalyst prunes its input).
         ok = gated.filter(F.col("success") & ~F.col("_reuse")).withColumn(
-            "ext", extract_udf(base_url, F.col("html"))
+            "ext", extract_udf(self._base_url(), F.col("html"))
         )
-        failed = gated.filter(~F.col("success"))
-
-        from website_to_agent_spark.functions.extract import format_content
-
         content = format_content(
             self.output_format,
             F.col("ext.markdown"), F.col("ext.text"), F.col("ext.cleaned_html"),
             title=F.col("ext.title"), description=F.col("ext.description"),
             keywords=F.col("ext.keywords"),
         )
-        ok_rows = ok.select(
-            "job_id",
-            "url",
-            "ord",
-            "depth",
-            F.lit(None).cast("long").alias("fetch_ord"),
-            "success",
-            F.col("ext.title").alias("title"),
-            F.col("ext.description").alias("description"),
-            F.col("ext.keywords").alias("keywords"),
-            F.col("ext.text").alias("text"),
-            F.col("ext.markdown").alias("markdown"),
-            content.alias("content"),
-            F.lit(step).alias("superstep"),
-            F.col("ext.links").alias("links"),
-            (
-                (
-                    F.col("discover")
-                    & ~F.coalesce(
-                        F.col("ext.robots_nofollow"), F.lit(False)
-                    )
-                )
-                if self.honor_meta_robots
-                else F.col("discover")
-            ).alias("discover"),
-            "base_domain",
-            *redir_cols,
-            F.lit(False).alias("reused"),
-            *(
-                [
-                    F.coalesce(
-                        F.col("ext.robots_noindex"), F.lit(False)
-                    ).alias("robots_noindex"),
-                    F.coalesce(
-                        F.col("ext.nofollow_links"),
-                        F.array().cast("array<string>"),
-                    ).alias("nofollow_links"),
-                ]
-                if self.honor_meta_robots
-                else []
-            ),
-        )
-        failed_rows = failed.select(
-            "job_id",
-            "url",
-            "ord",
-            "depth",
-            F.lit(None).cast("long").alias("fetch_ord"),
-            "success",
-            *[F.lit(None).cast("string").alias(c) for c in ("title", "description")],
-            F.lit(None).cast("array<string>").alias("keywords"),
-            *[F.lit(None).cast("string").alias(c) for c in ("text", "markdown", "content")],
-            F.lit(step).alias("superstep"),
-            F.lit(None).cast(schema.T.ArrayType(schema.LINK)).alias("links"),
-            F.lit(False).alias("discover"),
-            "base_domain",
-            *redir_cols,
-            F.lit(False).alias("reused"),
-            *(
-                [
-                    F.lit(False).alias("robots_noindex"),
-                    F.array().cast("array<string>").alias("nofollow_links"),
-                ]
-                if self.honor_meta_robots
-                else []
-            ),
-        )
-        all_parts = ok_rows.unionByName(failed_rows)
+        ext = {f: F.col("ext." + f) for f in _PAYLOAD_FIELDS if f != "content"}
+        parts = [
+            self._bundle(ok, step, {**ext, "content": content},
+                         F.col("discover"), reused=False),
+            self._bundle(gated.filter(~F.col("success")), step, {},
+                         F.lit(False), reused=False),
+        ]
         if has_snap:
             # reused rows take the stored extraction AND the stored
             # out-links verbatim (the snapshot is the link DB):
             # byte-identical html ⟹ identical links, so traversal
             # continues without the parse
-            reused_rows = gated.filter(F.col("_reuse")).select(
-                "job_id",
-                "url",
-                "ord",
-                "depth",
-                F.lit(None).cast("long").alias("fetch_ord"),
-                "success",
-                F.col("_snap_title").alias("title"),
-                F.col("_snap_description").alias("description"),
-                F.col("_snap_keywords").alias("keywords"),
-                F.col("_snap_text").alias("text"),
-                F.col("_snap_markdown").alias("markdown"),
-                F.col("_snap_content").alias("content"),
-                F.lit(step).alias("superstep"),
-                F.col("_snap_links").alias("links"),
-                (
-                    (F.col("discover") & ~F.col("_snap_nofollow"))
-                    if self.honor_meta_robots
-                    else F.col("discover")
-                ).alias("discover"),
-                "base_domain",
-                *redir_cols,
-                F.lit(True).alias("reused"),
-                *(
-                    [
-                        F.col("_snap_noindex").alias("robots_noindex"),
-                        F.col("_snap_nflinks").alias("nofollow_links"),
-                    ]
-                    if self.honor_meta_robots
-                    else []
-                ),
-            )
-            all_parts = all_parts.unionByName(reused_rows)
+            parts.append(self._bundle(
+                gated.filter(F.col("_reuse")), step,
+                {f: F.col("_snap_" + f) for f in _PAYLOAD_FIELDS},
+                F.col("discover"), reused=True,
+            ))
         # materialize the bundle: extraction runs once per superstep
-        all_rows = all_parts.localCheckpoint(eager=True)
+        bundle = reduce(DataFrame.unionByName, parts).localCheckpoint(eager=True)
         # the bundle is materialized — the gated-batch checkpoint (its
         # only consumer) is dead; release it so superstep storage stays
         # O(current bundle)
         _release_checkpoint(gated)
-        new_crawled = all_rows.select(*[f.name for f in schema.CRAWLED.fields])
-
-        nf_cols = ["nofollow_links"] if self.honor_meta_robots else []
-        candidates = (
-            all_rows.filter(F.col("discover"))
-            .select(
-                "job_id",
-                F.col("ord").alias("parent_ord"),
-                (F.col("depth") + 1).alias("depth"),
-                "base_domain",
-                *nf_cols,
-                F.posexplode_outer("links").alias("_i", "link"),
-            )
-            .select(
-                "job_id",
-                F.col("link.url").alias("url"),
-                "parent_ord",
-                F.col("link.pos").alias("pos"),
-                "depth",
-                "base_domain",
-                *nf_cols,
-            )
-            .filter(F.col("url").isNotNull())
-            .filter(filters.client_link_ok(F.col("url"), F.col("base_domain")))
-            .drop("base_domain")
-        )
-        if self.honor_meta_robots:
-            # rel=nofollow anchors don't enter the frontier (per-row
-            # array membership — no join, the list rides the bundle)
-            candidates = candidates.filter(
-                ~F.coalesce(
-                    F.array_contains(F.col("nofollow_links"), F.col("url")),
-                    F.lit(False),
-                )
-            ).drop("nofollow_links")
-
-        per_job = all_rows.groupBy("job_id").agg(
-            F.count("*").alias("n_fetched"),
-            F.sum(F.col("success").cast("long")).alias("n_parsed"),
-            F.sum((~F.col("success")).cast("long")).alias("n_failed"),
-            F.sum(F.col("success").cast("long")).alias("n_budget"),
-            F.sum(F.size(F.coalesce(F.col("links"), F.array()))).alias("n_links"),
-            F.sum(F.length(F.coalesce(F.col("text"), F.lit("")))).alias("n_bytes"),
-        )
-        return new_crawled, candidates, per_job, all_rows
+        return bundle
 
     # ------------------------------------------------------------- seeder
-    def _seeder_step(self, fetched: DataFrame, step: int):
-        """One seeder-mode superstep: link extraction over the FULL
-        document (`url_seeder.py:132,143-174`), validity filters F1-F6;
-        no text extraction (the seeder discovers, it doesn't extract).
+    def _seeder_step(self, fetched: DataFrame, step: int) -> DataFrame:
+        """One seeder-mode superstep bundle: link extraction over the
+        FULL document (`url_seeder.py:132,143-174`); no text extraction
+        (the seeder discovers, it doesn't extract).
 
         Non-HTML 2xx responses (``success`` but not ``html_ok``) are
         visited-but-skipped (`url_seeder.py:126-129`): they never enter
@@ -1735,143 +1620,34 @@ class CrawlEngine:
         # subtree; materialize the fetched batch once (batch-bounded)
         # and release it after the bundle checkpoint.
         fetched = fetched.localCheckpoint(eager=True)
-        redirected = "final_url" in fetched.columns
-        base_url = (
-            F.coalesce(F.col("final_url"), F.col("url"))
-            if redirected
-            else F.col("url")
-        )
-        redir_cols = (
-            ["final_url", "n_hops", "redirect_ok"] if redirected else []
-        )
+        html_ok = F.col("success") & F.col("html_ok")
         if self.honor_meta_robots:
-            # one-parse links+directives kernel; page-level nofollow
-            # yields no discovery (page still visited — it consumes
-            # its batch slot like the reference's non-HTML skip)
-            from website_to_agent_spark.functions.extract import (
-                seeder_links_meta_udf,
+            # one-parse links+directives kernel; a page-level nofollow
+            # page yields no links (still visited — it consumes its
+            # batch slot like the reference's non-HTML skip)
+            ok = fetched.filter(html_ok).withColumn(
+                "_sm", seeder_links_meta_udf(F.col("html"), self._base_url())
             )
-
-            ok = (
-                fetched.filter(F.col("success") & F.col("html_ok"))
-                .withColumn(
-                    "_sm", seeder_links_meta_udf(F.col("html"), base_url)
-                )
-                .withColumn(
-                    "links",
-                    F.when(
-                        F.coalesce(
-                            F.col("_sm.robots_nofollow"), F.lit(False)
-                        ),
-                        F.array().cast(schema.T.ArrayType(schema.LINK)),
-                    ).otherwise(F.col("_sm.links")),
-                )
-                .withColumn(
-                    "robots_noindex",
-                    F.coalesce(F.col("_sm.robots_noindex"), F.lit(False)),
-                )
-                .withColumn(
-                    "nofollow_links",
-                    F.coalesce(
-                        F.col("_sm.nofollow_links"),
-                        F.array().cast("array<string>"),
-                    ),
-                )
-                .drop("_sm")
-            )
+            payload = {f: F.col("_sm." + f) for f in _META_FIELDS}
+            payload["links"] = F.when(
+                F.coalesce(F.col("_sm.robots_nofollow"), F.lit(False)),
+                F.array().cast(_PAYLOAD_TYPES["links"]),
+            ).otherwise(F.col("_sm.links"))
         else:
-            ok = fetched.filter(
-                F.col("success") & F.col("html_ok")
-            ).withColumn(
-                "links", seeder_links_udf(F.col("html"), base_url)
+            ok = fetched.filter(html_ok).withColumn(
+                "links", seeder_links_udf(F.col("html"), self._base_url())
             )
+            payload = {"links": F.col("links")}
         # failed ∪ skipped-non-HTML: both get null links; `success` is
         # kept as-is so the skipped rows stay out of n_failed.
-        failed = fetched.filter(~F.col("success") | ~F.col("html_ok"))
-
-        meta_ok_cols = (
-            ["robots_noindex", "nofollow_links"]
-            if self.honor_meta_robots
-            else []
+        bundle = (
+            self._bundle(ok, step, payload, F.lit(True), reused=False)
+            .unionByName(self._bundle(fetched.filter(~html_ok), step, {},
+                                      F.lit(False), reused=False))
+            .localCheckpoint(eager=True)
         )
-        meta_failed_cols = (
-            [
-                F.lit(False).alias("robots_noindex"),
-                F.array().cast("array<string>").alias("nofollow_links"),
-            ]
-            if self.honor_meta_robots
-            else []
-        )
-        ok_rows = ok.select(
-            "job_id", "url", "ord", "depth",
-            F.lit(None).cast("long").alias("fetch_ord"),
-            "success",
-            *[F.lit(None).cast("string").alias(c) for c in ("title", "description")],
-            F.lit(None).cast("array<string>").alias("keywords"),
-            *[F.lit(None).cast("string").alias(c) for c in ("text", "markdown", "content")],
-            F.lit(step).alias("superstep"),
-            "links",
-            "base_domain",
-            *redir_cols,
-            *meta_ok_cols,
-        )
-        failed_rows = failed.select(
-            "job_id", "url", "ord", "depth",
-            F.lit(None).cast("long").alias("fetch_ord"),
-            "success",
-            *[F.lit(None).cast("string").alias(c) for c in ("title", "description")],
-            F.lit(None).cast("array<string>").alias("keywords"),
-            *[F.lit(None).cast("string").alias(c) for c in ("text", "markdown", "content")],
-            F.lit(step).alias("superstep"),
-            F.lit(None).cast(schema.T.ArrayType(schema.LINK)).alias("links"),
-            "base_domain",
-            *redir_cols,
-            *meta_failed_cols,
-        )
-        # materialize the bundle: link extraction runs once per superstep
-        all_rows = ok_rows.unionByName(failed_rows).localCheckpoint(eager=True)
         _release_checkpoint(fetched)
-        new_crawled = all_rows.select(*[f.name for f in schema.CRAWLED.fields])
-
-        nf_cols = ["nofollow_links"] if self.honor_meta_robots else []
-        candidates = (
-            all_rows.filter(F.col("success")).select(
-                "job_id",
-                F.col("ord").alias("parent_ord"),
-                (F.col("depth") + 1).alias("depth"),
-                "base_domain",
-                *nf_cols,
-                F.posexplode_outer("links").alias("_i", "link"),
-            )
-            .select(
-                "job_id",
-                F.col("link.url").alias("url"),
-                "parent_ord",
-                F.col("link.pos").alias("pos"),
-                "depth",
-                "base_domain",
-                *nf_cols,
-            )
-            .filter(F.col("url").isNotNull())
-            .filter(filters.seeder_link_ok(F.col("url"), F.lower(F.col("base_domain"))))
-            .drop("base_domain")
-        )
-        if self.honor_meta_robots:
-            candidates = candidates.filter(
-                ~F.coalesce(
-                    F.array_contains(F.col("nofollow_links"), F.col("url")),
-                    F.lit(False),
-                )
-            ).drop("nofollow_links")
-
-        per_job = all_rows.groupBy("job_id").agg(
-            F.count("*").alias("n_fetched"),
-            F.sum(F.col("success").cast("long")).alias("n_parsed"),
-            F.sum((~F.col("success")).cast("long")).alias("n_failed"),
-            F.sum(F.size(F.coalesce(F.col("links"), F.array()))).alias("n_links"),
-            F.sum(F.lit(0)).alias("n_bytes"),
-        )
-        return new_crawled, candidates, per_job, all_rows
+        return bundle
 
 
 def combined_llmstxt(crawled: DataFrame) -> DataFrame:

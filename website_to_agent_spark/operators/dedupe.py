@@ -511,9 +511,11 @@ def simhash_append(df: DataFrame, text_col: str = "text",
 
         tok_re = _re.compile(r"[a-z0-9]+")
         shifts = np.arange(n_bits, dtype=np.uint64)
-        # per-task token-hash memo: natural text repeats tokens
+        # per-batch token-hash memo: natural text repeats tokens
         # heavily (stopwords), so most lookups hit the dict instead
-        # of re-hashing — value-neutral, hash(t) is a pure function
+        # of re-hashing — value-neutral, hash(t) is a pure function.
+        # Reset per Arrow batch so it stays bounded by one batch's
+        # distinct tokens, never the whole partition's.
         memo: dict = {}
 
         def _h(tk):
@@ -528,6 +530,7 @@ def simhash_append(df: DataFrame, text_col: str = "text",
             return v
 
         for b in batches:
+            memo.clear()
             fps = []
             for t in b[text_col]:
                 if t is None:

@@ -19,7 +19,7 @@ filter+project of the page store — a small fraction of rows —
 materialized once per crawl. Per superstep, resolution is ``max_hops``
 rounds of broadcast-INNER joins of the (tiny) still-redirecting batch
 subset against the edge table: the store-scale side streams and never
-shuffles, mirroring ``CrawlEngine._fetch``'s hit/miss pattern, and the
+shuffles, mirroring ``crawl.hit_miss_join``, and the
 probe side shrinks every hop (most urls settle at hop 0). The
 whole-store form (``final_destinations`` — redirect-aware url
 canonicalization feeding ``webtext.url_dedup``) uses plain hash joins
@@ -142,8 +142,13 @@ def resolve_redirects(
                     (F.col("n_hops") + moved.cast("int")).alias("n_hops"),
                 )
             )
+        # the probe side is the DISTINCT src set: a failed chain whose
+        # final url has several outgoing edges (duplicate-src rows,
+        # e.g. two store snapshots of one redirect page) still yields
+        # one row per input url
         return (
-            cur.join(e, F.col("final_url") == F.col("_rs"), "left")
+            cur.join(e.select("_rs").distinct(),
+                     F.col("final_url") == F.col("_rs"), "left")
             .select(
                 "url", "final_url", "n_hops",
                 F.col("_rs").isNull().alias("redirect_ok"),

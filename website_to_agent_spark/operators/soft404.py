@@ -35,8 +35,8 @@ Scale shape — the expensive side never moves:
 
 - ``probe_signatures``: the probe table is HOST-granular. The store
   lookup is a broadcast-INNER join (probes broadcast, the corpus-
-  scale store streamed and never shuffled — the ``CrawlEngine._fetch``
-  pattern); text extraction runs the existing Arrow kernel on ≤hosts
+  scale store streamed and never shuffled — the
+  ``crawl.hit_miss_join`` pattern); text extraction runs the existing Arrow kernel on ≤hosts
   rows; the signature is one host-keyed SimHash agg.
 - ``classify_soft404``: per-page SimHash is the library's explode +
   64-conditional-sum agg keyed by doc id (map-side combined); the

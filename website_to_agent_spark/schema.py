@@ -42,20 +42,6 @@ EXTRACTED = T.StructType(
     ]
 )
 
-# Crawl frontier (SURVEY §1.1): ord is the global FIFO enqueue rank per
-# job — the key that reproduces the reference's sequential crawl order.
-FRONTIER = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("ord", T.LongType(), False),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("reg_domain", T.StringType(), True),
-        T.StructField("score", T.DoubleType(), True),
-    ]
-)
-
 SEEN = T.StructType(
     [
         T.StructField("job_id", T.StringType(), False),
@@ -83,13 +69,16 @@ CRAWLED = T.StructType(
     ]
 )
 
+# Per-job crawl state (CrawlEngine keeps it driver-side and commits it
+# with every catalog superstep). max_depth -1 = no depth cap.
 JOB_STATE = T.StructType(
     [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("budget_used", T.LongType(), False),
-        T.StructField("next_ord", T.LongType(), False),
-        T.StructField("max_urls", T.LongType(), False),
-        T.StructField("active", T.BooleanType(), False),
+        T.StructField("job_id", T.StringType(), True),
+        T.StructField("budget_used", T.LongType(), True),
+        T.StructField("next_ord", T.LongType(), True),
+        T.StructField("max_urls", T.LongType(), True),
+        T.StructField("max_depth", T.IntegerType(), True),
+        T.StructField("base_domain", T.StringType(), True),
     ]
 )
 
