@@ -332,3 +332,63 @@ def test_robots_meta_name_case_insensitive():
         "https://m.test/",
     )
     assert rec["robots_noindex"] and not rec["robots_nofollow"]
+
+
+_SEEDER_EDGE_PAGES = {
+    # empty, whitespace-only and #-fragment hrefs are skipped; a
+    # valueless rel and a rel=nofollow anchor still count as links
+    "https://e.example.com/a/edges.html": (
+        '<html><body><a href="">e</a><a href="   ">w</a>'
+        '<a href="#top">f</a><a href=" #x ">g</a>'
+        '<a rel href="/valueless-rel.html">v</a>'
+        '<a rel="nofollow" href="nf.html">n</a>'
+        '<a href=" rel.html ">r</a><a>no href</a>'
+        '<a href="mailto:x@example.com">m</a></body></html>'
+    ),
+    # urljoin raises on an invalid IPv6 host: the page yields no links
+    "https://e.example.com/a/ipv6.html": (
+        '<html><body><a href="/ok.html">ok</a>'
+        '<a href="http://[::1/broken">bad</a></body></html>'
+    ),
+    "https://e.example.com/a/none.html": "<html><body>no anchors</body></html>",
+}
+
+
+def test_seeder_link_kernel_matches_oracle(spark, site):
+    """The seeder's one link kernel (``seeder_links_meta_udf``) returns
+    exactly the sequential oracle's links (``extraction.seeder_links``)
+    on the fixture site and on href edge cases."""
+    from website_to_agent_spark import fixtures
+    from website_to_agent_spark.functions.extract import (
+        _decode,
+        seeder_links_meta_udf,
+    )
+
+    ts = site.rows[0]["warc_ts"]
+    rows = list(site.rows) + [
+        {"url": u, "warc_ts": ts, "html": h.encode(), "text": None,
+         "lang": None}
+        for u, h in _SEEDER_EDGE_PAGES.items()
+    ]
+    want = {
+        r["url"]: extraction.seeder_links(_decode(r["html"]), r["url"])
+        for r in rows
+    }
+    for u, html in _SEEDER_EDGE_PAGES.items():
+        assert extraction.seeder_links_meta(html, u)["links"] == want[u]
+    assert want["https://e.example.com/a/edges.html"] == [
+        ("https://e.example.com/valueless-rel.html", 4),
+        ("https://e.example.com/a/nf.html", 5),
+        ("https://e.example.com/a/rel.html", 6),
+        ("mailto:x@example.com", 7),
+    ]
+    assert want["https://e.example.com/a/ipv6.html"] == []
+
+    got = {
+        r.url: [(l.url, l.pos) for l in r.links]
+        for r in fixtures.pages_rows_to_spark(spark, rows)
+        .select("url", seeder_links_meta_udf(F.col("html"), F.col("url"))
+                .links.alias("links"))
+        .collect()
+    }
+    assert got == want

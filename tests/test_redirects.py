@@ -95,16 +95,18 @@ def test_engine_follows_redirects(spark, redirect_site):
     res.unpersist()
 
 
-def test_engine_redirects_with_bloom_and_robots(spark, redirect_site):
-    """The production path (bloom prefilter + politeness drain) keeps
-    the same redirect semantics: finals dedup even though the bloom
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_engine_redirects_with_bloom_and_robots(spark, redirect_site,
+                                                 seen_filter):
+    """The production path (seen prefilter + politeness drain) keeps
+    the same redirect semantics: finals dedup even though the filter
     has not absorbed them when this step's candidates probe it."""
     robots = spark.createDataFrame(
         [("www.rsite.example.com", [], 0.01)],
         "host string, disallow array<string>, crawl_delay double",
     )
     res = CrawlEngine(
-        spark, redirect_site, mode="client", use_bloom=True,
+        spark, redirect_site, mode="client", seen_filter=seen_filter,
         robots=robots,
     ).run([CrawlJob("j", f"{H}/seed.html", max_urls=10)])
     rows = {r.url: r for r in res.crawled.collect()}

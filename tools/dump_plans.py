@@ -32,7 +32,7 @@ def main() -> None:
     from website_to_agent_spark import fixtures, plans
     from website_to_agent_spark.functions.extract import extract_udf
     from website_to_agent_spark.operators import ann, bm25, dedupe
-    from website_to_agent_spark.operators.crawl import CrawlEngine
+    from website_to_agent_spark.operators.crawl import CrawlEngine, _reg_domain
     from website_to_agent_spark.session import get_spark
 
     spark = get_spark(app_name="plan-dump", cores=4, shuffle_partitions=4)
@@ -98,6 +98,37 @@ def main() -> None:
         "batch rows without a snapshot come from a broadcast anti-join "
         "against the hit keys, with typed-null `_snap_*` columns.",
     )
+
+    # 2c. candidate seen anti-join behind each URL-seen prefilter, as
+    # the engine binds it (build, anti-join with the persisted probe)
+    seen = spark.createDataFrame(
+        [("j", u) for u in site.seeds] + [("j", site.seeds[0] + "?x")],
+        "job_id string, url string",
+    )
+    cands = spark.createDataFrame(
+        [("j", site.seeds[0], 0, 0, 1), ("j", site.seeds[0] + "#new", 0, 1, 1)],
+        "job_id string, url string, parent_ord long, pos int, depth int",
+    )
+    dom = _reg_domain()
+    for name in ("bloom", "cuckoo"):
+        sf = CrawlEngine(spark, pages, seen_filter=name)._seen_filter
+        table = sf.build(
+            seen.select(dom.alias("reg_domain"), "url")
+        ).localCheckpoint(eager=True)
+        add(
+            f"Candidate seen anti-join ({name} prefilter)",
+            sf.anti_join(
+                cands.withColumn("reg_domain", dom), seen, table,
+                join_keys=["job_id", "url"], cache_out=[],
+            ).drop("reg_domain"),
+            "`bloom.prefiltered_anti_join`, the one contract both "
+            "filters share: the probe (broadcast per-domain filter "
+            "table + Arrow probe kernel) is persisted once — both "
+            "branches read the same `InMemoryRelation`, so the kernel "
+            "runs once per superstep. Probe negatives go straight to "
+            "the union; only `maybe_seen` positives reach the exact "
+            "left-anti join against the seen set.",
+        )
 
     # 3. filter pushdown proof
     filt = docs.filter(F.col("doc_id") < 10).select("doc_id", "n_chars")

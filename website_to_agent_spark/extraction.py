@@ -217,9 +217,9 @@ def seeder_links_meta(html: str, current_url: str) -> dict:
     ``{links: [(url, pos)...], robots_nofollow: bool,
     nofollow_links: [url...]}`` — same link semantics as
     :func:`seeder_links`; the meta scan is the case-insensitive one of
-    :func:`extract_page`. Used only by
-    ``CrawlEngine(honor_meta_robots=True)`` seeder mode, so the
-    parity path keeps the original kernel byte-for-byte."""
+    :func:`extract_page`. The kernel behind ``seeder_links_meta_udf``
+    (the seeder's and the link graph's); its ``links`` must stay equal
+    to :func:`seeder_links`, the sequential oracle's."""
     try:
         soup = htmlmini.parse(html)
         robots_tokens = set()

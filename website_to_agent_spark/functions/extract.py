@@ -94,21 +94,6 @@ def extract_udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-@pandas_udf(schema.T.ArrayType(schema.LINK))
-def seeder_links_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    """Full-document link extraction, seeder semantics
-    (`url_seeder.py:143-174`): href stripped, empty/#-prefixed skipped,
-    urljoin applied. Validity filters (F1-F6) are Column predicates in
-    ``operators.filters`` so Catalyst can push them."""
-    out = []
-    for h, u in zip(html, url):
-        out.append(
-            [{"url": lu, "pos": pos}
-             for lu, pos in extraction.seeder_links(_decode(h), u or "")]
-        )
-    return pd.Series(out)
-
-
 _SEEDER_META = schema.T.StructType(
     [
         schema.T.StructField("links", schema.T.ArrayType(schema.LINK), True),
@@ -124,9 +109,14 @@ _SEEDER_META = schema.T.StructType(
 
 @pandas_udf(_SEEDER_META)
 def seeder_links_meta_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """Seeder link extraction + robots directives, one parse
-    (extraction.seeder_links_meta) — the honor_meta_robots seeder
-    kernel; the parity path keeps seeder_links_udf untouched."""
+    """Full-document link extraction, seeder semantics
+    (`url_seeder.py:143-174`: href stripped, empty/#-prefixed skipped,
+    urljoin applied), plus the robots directives from the same parse
+    (extraction.seeder_links_meta) — the one seeder link kernel. Its
+    ``links`` equal ``extraction.seeder_links``; callers that ignore
+    robots meta read only ``links``. Validity filters (F1-F6) are
+    Column predicates in ``operators.filters`` so Catalyst can push
+    them."""
     out = {"links": [], "robots_nofollow": [], "robots_noindex": [],
            "nofollow_links": []}
     for h, u in zip(html, url):

@@ -140,13 +140,14 @@ def probe_blooms(candidates: DataFrame, blooms: DataFrame,
     ).drop("bloom")
 
 
-def bloom_anti_join(candidates: DataFrame, seen: DataFrame,
-                    blooms: DataFrame, join_keys: list[str],
-                    key_col: str = "reg_domain",
-                    n_bits: int = 1 << 17, k: int = 7,
-                    cache_out: list | None = None) -> DataFrame:
-    """Exact NOT-EXISTS semantics with the Bloom as a prefilter:
-    negatives bypass the shuffle, positives get the exact anti-join.
+def prefiltered_anti_join(probed: DataFrame, seen: DataFrame,
+                          join_keys: list[str],
+                          cache_out: list | None = None) -> DataFrame:
+    """Exact NOT-EXISTS semantics behind an approximate-membership
+    prefilter — the contract every URL-seen filter (this module's
+    Bloom, ``cuckoo``) shares. ``probed`` carries ``maybe_seen``
+    (the filter's probe): negatives are definitively new and bypass
+    the shuffle, positives get the exact anti-join against ``seen``.
 
     ``cache_out``: when given, the probed frame is ``persist()``-ed
     (lazily — the first consuming job populates it) and appended to
@@ -154,8 +155,6 @@ def bloom_anti_join(candidates: DataFrame, seen: DataFrame,
     Both output branches read the probe, so without the cache the
     candidate subtree and the Arrow probe kernel evaluate twice per
     superstep (Spark reuses exchanges, not Python eval nodes)."""
-    probed = probe_blooms(candidates, blooms, key_col=key_col,
-                          n_bits=n_bits, k=k)
     if cache_out is not None:
         probed = probed.persist()
         cache_out.append(probed)
@@ -165,3 +164,14 @@ def bloom_anti_join(candidates: DataFrame, seen: DataFrame,
         seen.select(*join_keys), join_keys, "left_anti"
     )
     return definitely_new.unionByName(verified_new)
+
+
+def bloom_anti_join(candidates: DataFrame, seen: DataFrame,
+                    blooms: DataFrame, join_keys: list[str],
+                    key_col: str = "reg_domain",
+                    n_bits: int = 1 << 17, k: int = 7,
+                    cache_out: list | None = None) -> DataFrame:
+    """:func:`prefiltered_anti_join` with the Bloom probe."""
+    probed = probe_blooms(candidates, blooms, key_col=key_col,
+                          n_bits=n_bits, k=k)
+    return prefiltered_anti_join(probed, seen, join_keys, cache_out)

@@ -13,10 +13,15 @@ superstep loop over DataFrames:
 
 Each superstep is one Catalyst-planned job::
 
-    frontier(batch) ⋈ pages → extract_udf → posexplode(links)
-      → Column filters (F1-F14) → [bloom prefilter] → left_anti seen
+    drain(frontier) ⋈ pages → extract_udf → posexplode(links)
+      → Column filters (F1-F14)
+      → [seen filter probe: negative ⇒ new, positive ⇒ left_anti seen]
       → min-key first-enqueue-wins dedup → ord assignment
       → append (crawled', seen', frontier', metrics')
+
+The seen filter (Bloom or cuckoo, ``seen_filter``) is one contract —
+``bloom.prefiltered_anti_join`` — bound once as (build, anti-join,
+fold); without one every candidate takes the exact ``left_anti``.
 
 Ordering parity: every enqueued URL carries ``ord`` — its global FIFO
 enqueue rank per job, assigned as ``next_ord + row_number() over
@@ -49,8 +54,8 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import Optional
+from functools import partial, reduce
+from typing import Callable, NamedTuple, Optional
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -63,10 +68,18 @@ from website_to_agent_spark.functions.extract import (
     extract_udf,
     format_content,
     seeder_links_meta_udf,
-    seeder_links_udf,
 )
-from website_to_agent_spark.operators import filters
+from website_to_agent_spark.operators import bloom, cuckoo, filters, traps
+from website_to_agent_spark.operators.politeness import (
+    polite_drain,
+    robots_filter,
+)
+from website_to_agent_spark.operators.redirects import (
+    redirect_edges,
+    resolve_redirects,
+)
 from website_to_agent_spark.sources.catalog import SnapshotCatalog
+from website_to_agent_spark.sources.httpfetch import http_fetch
 
 
 @dataclass
@@ -116,7 +129,42 @@ _PAYLOAD_TYPES = {
 _SNAP_FIELDS = ("digest",) + _PAYLOAD_FIELDS
 # store-fetch flags: True on a hit, False on a miss
 _FETCH_FLAGS = ("success", "html_ok")
+_FRONTIER_COLS = ("job_id", "url", "depth", "ord")
 _URL_STEP_DDL = "job_id string, url string, superstep int"
+# the per-superstep side tables (CrawlResultTables fields of the same
+# name), each None unless its feature is on
+_SIDE_TABLE_DDL = {
+    "trap_drops": "job_id string, host string, template string,"
+                  " dropped long, superstep int",
+    "redirects": "job_id string, url string, final_url string,"
+                 " n_hops int, redirect_ok boolean, superstep int",
+    "revalidated": _URL_STEP_DDL,
+    "noindexed": _URL_STEP_DDL,
+}
+
+
+class _SeenFilter(NamedTuple):
+    """A URL-seen prefilter: ``build`` a per-domain filter table from
+    (reg_domain, url) rows, ``anti_join`` candidates against the exact
+    seen set behind it (bloom.prefiltered_anti_join — negatives skip
+    the exact check), ``fold`` a (reg_domain, url) delta into it."""
+    build: Callable
+    anti_join: Callable
+    fold: Callable
+
+
+_SEEN_FILTERS = {
+    "bloom": _SeenFilter(bloom.build_blooms, bloom.bloom_anti_join,
+                         bloom.add_to_blooms),
+    "cuckoo": _SeenFilter(cuckoo.build_cuckoos, cuckoo.cuckoo_anti_join,
+                          cuckoo.add_to_cuckoos),
+}
+
+
+def _reg_domain():
+    """The seen filters' partition key (and the domain-quota drain's):
+    the registrable domain of ``url``."""
+    return urlfns.reg_domain(urlfns.host(F.col("url")))
 
 
 def _miss_columns(big: DataFrame, big_key: str, flags=()) -> list:
@@ -173,6 +221,23 @@ def hit_miss_join(
         "left_anti",
     ).select("*", *_miss_columns(big, big_key, flags))
     return hits.unionByName(misses)
+
+
+def _ranked(rows: DataFrame, partition, order,
+            rank_col: str = "_rk") -> DataFrame:
+    """``rows`` plus ``rank_col``: the row number within ``partition``
+    in ``order``."""
+    w = Window.partitionBy(*partition).orderBy(*order)
+    return rows.withColumn(rank_col, F.row_number().over(w))
+
+
+def _ranked_split(ranked: DataFrame, n: int):
+    """A drain's ``(batch, leftover)``: the first ``n`` rows of each
+    :func:`_ranked` partition, and the frontier columns of the rest."""
+    return (
+        ranked.filter(F.col("_rk") <= n).drop("_rk"),
+        ranked.filter(F.col("_rk") > n).select(*_FRONTIER_COLS),
+    )
 
 
 def _union_all(spark: SparkSession, schema_, parts: list) -> DataFrame:
@@ -245,7 +310,6 @@ class CrawlEngine:
         bloom_bits: int = 1 << 20,
         seen_filter: Optional[str] = None,
         cuckoo_buckets: int = 1 << 12,
-        cuckoo_slots: int = 4,
         robots: Optional[DataFrame] = None,
         superstep_secs: float = 1.0,
         fetch_timeout_s: float = 30.0,
@@ -256,8 +320,6 @@ class CrawlEngine:
         priority_on: str = "url",
         opic: bool = False,
         trap_max_urls: Optional[int] = None,
-        follow_redirects: bool = True,
-        redirect_max_hops: int = 5,
         revalidate_with: Optional[DataFrame] = None,
         honor_meta_robots: bool = False,
     ):
@@ -286,13 +348,19 @@ class CrawlEngine:
         # anti-join shuffle), positive ⇒ exact check — and both are
         # maintained O(Δ) per superstep (OR-merge / cogrouped fold).
         # The cuckoo additionally supports fingerprint deletion
-        # (re-crawl TTL expiry — operators/cuckoo.py).
+        # (re-crawl TTL expiry — operators/cuckoo.py). The engine binds
+        # the chosen filter's (build, anti-join, fold) once, sized here
+        # (cuckoo slots: the module default of 4), and never branches
+        # on which filter it is.
         assert seen_filter in (None, "bloom", "cuckoo")
-        self.seen_filter = seen_filter or ("bloom" if use_bloom else None)
-        self.use_bloom = self.seen_filter is not None
-        self.bloom_bits = bloom_bits
-        self.cuckoo_buckets = cuckoo_buckets
-        self.cuckoo_slots = cuckoo_slots
+        seen_filter = seen_filter or ("bloom" if use_bloom else None)
+        size = {"bloom": {"n_bits": bloom_bits},
+                "cuckoo": {"n_buckets": cuckoo_buckets}}
+        self._seen_filter = (
+            _SeenFilter(*(partial(f, **size[seen_filter])
+                          for f in _SEEN_FILTERS[seen_filter]))
+            if seen_filter else None
+        )
         # robots(host, disallow array<string>, crawl_delay double):
         # disallowed paths never enter the frontier; crawl_delay drives
         # per-host drain quotas (T2) via polite_drain.
@@ -374,19 +442,16 @@ class CrawlEngine:
         # redirect row returns the FINAL page's content (the
         # reference's HTTP client follows chains transparently,
         # `crawl4ai_client.py:75`), links resolve against the FINAL
-        # url, chains past `redirect_max_hops` fail the fetch
-        # (TooManyRedirects — loops hit the same cap), and final urls
-        # enter the seen set so a 301 alias and its target can't both
-        # be fetched by later enqueues. CrawlResultTables.redirects
-        # records every followed/failed chain (never silent).
-        self.follow_redirects = follow_redirects
-        self.redirect_max_hops = redirect_max_hops
-        # the chain columns every bundle row carries when redirects
-        # are followed
+        # url, chains past `resolve_redirects`' hop cap (5) fail the
+        # fetch (TooManyRedirects — loops hit the same cap), and final
+        # urls enter the seen set so a 301 alias and its target can't
+        # both be fetched by later enqueues.
+        # CrawlResultTables.redirects records every followed/failed
+        # chain (never silent). The chain columns every bundle row
+        # carries when redirects are followed:
         self._redir_cols = (
             ["final_url", "n_hops", "redirect_ok"]
-            if follow_redirects and pages is not None
-            and "redirect_to" in pages.columns
+            if pages is not None and "redirect_to" in pages.columns
             else []
         )
         # CONDITIONAL REVALIDATION (If-None-Match → 304, see
@@ -502,6 +567,15 @@ class CrawlEngine:
         # leftover: the enqueue counts); None = probe before draining
         frontier_counts = None
         frontier, seen = self._init_state(jobs)
+
+        def absorb(read) -> None:
+            """Append one step's (or one compaction's) crawled/metrics/
+            seen deltas, each got by ``read(name)``."""
+            nonlocal seen
+            crawled_parts.append(read("crawled_delta"))
+            metrics_parts.append(read("metrics_delta"))
+            seen = seen.unionByName(read("seen_delta"))
+
         latest = (
             self.catalog.latest_superstep()
             if resume and self.catalog is not None
@@ -522,20 +596,10 @@ class CrawlEngine:
             base = self.catalog.latest_compaction()
             first_k = 0
             if base is not None and base <= latest:
-                crawled_parts.append(
-                    self.catalog.read_compacted(spark, base, "crawled_delta")
-                )
-                metrics_parts.append(
-                    self.catalog.read_compacted(spark, base, "metrics_delta")
-                )
-                seen = seen.unionByName(
-                    self.catalog.read_compacted(spark, base, "seen_delta")
-                )
+                absorb(partial(self.catalog.read_compacted, spark, base))
                 first_k = base + 1
             for k in range(first_k, latest + 1):
-                crawled_parts.append(self.catalog.read(spark, k, "crawled_delta"))
-                metrics_parts.append(self.catalog.read(spark, k, "metrics_delta"))
-                seen = seen.unionByName(self.catalog.read(spark, k, "seen_delta"))
+                absorb(partial(self.catalog.read, spark, k))
             start_step = latest + 1
         if not js:
             js = self._fresh_job_state(jobs)
@@ -565,14 +629,9 @@ class CrawlEngine:
         # broadcast joins of the batch — see _fetch_following.
         redirect_edges_df: Optional[DataFrame] = None
         if self._redir_cols:
-            from website_to_agent_spark.operators import (
-                redirects as redirects_mod,
-            )
-
-            redirect_edges_df = redirects_mod.redirect_edges(
+            redirect_edges_df = redirect_edges(
                 self.pages
             ).localCheckpoint(eager=True)
-        redirect_parts: list[DataFrame] = []
         # revalidation snapshot (client mode only — the seeder extracts
         # nothing, so there is nothing to reuse)
         snap: Optional[DataFrame] = None
@@ -582,8 +641,17 @@ class CrawlEngine:
             and self.mode == "client"
         ):
             snap = self._snapshot_columns(self.revalidate_with)
-        reval_parts: list[DataFrame] = []
-        noindex_parts: list[DataFrame] = []
+        # the side tables this run keeps: name → its per-step parts
+        side_parts: dict = {
+            name: []
+            for name, on in (
+                ("trap_drops", self.trap_max_urls is not None),
+                ("redirects", redirect_edges_df is not None),
+                ("revalidated", snap is not None),
+                ("noindexed", self.honor_meta_robots),
+            )
+            if on
+        }
         # the mode's superstep: its bundle builder, its link predicate
         # over (url, base_domain), and the per-job stat that spends
         # budget (client: successes; seeder: enqueues)
@@ -599,7 +667,7 @@ class CrawlEngine:
             )
 
         step = start_step
-        blooms: Optional[DataFrame] = None
+        filter_table: Optional[DataFrame] = None
         # OPIC cash/history (see __init__): every frontier row starts
         # with cash 1.0 (on a catalog resume: the resumed frontier —
         # documented re-learn, same contract as the trap guard)
@@ -611,9 +679,8 @@ class CrawlEngine:
                 F.lit(1.0).alias("cash"), F.lit(0.0).alias("hist"),
             ).localCheckpoint(eager=True)
         # trap-guard state: cumulative enqueue counts per (job, host,
-        # template) + per-step drop records (see __init__ docstring)
+        # template) (see __init__ docstring)
         trap_counts: Optional[DataFrame] = None
-        trap_drop_parts: list[DataFrame] = []
         # checkpoint lifecycle: `retained` = blocks the RESULT tables
         # still need (released by CrawlResultTables.unpersist());
         # `prev_*` = the previous superstep's state checkpoints, dead as
@@ -621,11 +688,19 @@ class CrawlEngine:
         # — bounded executor storage over arbitrarily long crawls.
         retained: list[DataFrame] = []
         prev_frontier_ckpt: Optional[DataFrame] = None
-        # deferred releases for LAZY checkpoints (the bloom/cuckoo
-        # merge): a lazy localCheckpoint materializes inside the next
+        # deferred releases for LAZY checkpoints (the seen-filter
+        # fold): a lazy localCheckpoint materializes inside the next
         # step's first consuming job instead of costing its own eager
         # job, so its parent can only be released AFTER that job ran
         pending_release: list[DataFrame] = []
+
+        def record(name: str, rows: DataFrame) -> None:
+            """Checkpoint one step's rows of side table ``name``; the
+            result table keeps the blocks."""
+            rows = rows.localCheckpoint(eager=True)
+            side_parts[name].append(rows)
+            retained.append(rows)
+
         _timing = os.environ.get("SPARK_GRAFT_STEP_TIMING") == "1"
 
         def _jid() -> int:
@@ -660,87 +735,8 @@ class CrawlEngine:
             _t_empty = time.time()
             _j_empty = _jid()
 
-            # ---- drain batch (O2/O4): per-job FIFO prefix, or the
-            # ranked (priority-queue) prefix when scores were given ----
-            if self.batch_per_job is not None:
-                if self.priority is not None or self.opic:
-                    scored = (
-                        self._join_cash(live, opic_cash)
-                        if self.opic else self._join_scores(live)
-                    )
-                    w_drain = Window.partitionBy("job_id").orderBy(
-                        F.desc_nulls_last("score"), "ord"
-                    )
-                    # _pop = the ranked pop order — _client_step's
-                    # budget window follows it instead of ord
-                    ranked = scored.withColumn(
-                        "_rk", F.row_number().over(w_drain)
-                    ).withColumn("_pop", F.col("_rk")).drop("score")
-                else:
-                    w_drain = Window.partitionBy("job_id").orderBy("ord")
-                    ranked = live.withColumn("_rk", F.row_number().over(w_drain))
-                batch = ranked.filter(F.col("_rk") <= self.batch_per_job).drop("_rk")
-                leftover = (
-                    ranked.filter(F.col("_rk") > self.batch_per_job)
-                    .drop("_rk")
-                    .select("job_id", "url", "depth", "ord")
-                )
-            elif self.domain_quota is not None:
-                dom = urlfns.reg_domain(urlfns.host(F.col("url")))
-                ranked = live.withColumn("_dom", dom).withColumn(
-                    "_rk",
-                    F.row_number().over(
-                        Window.partitionBy("job_id", "_dom").orderBy("ord")
-                    ),
-                )
-                batch = ranked.filter(F.col("_rk") <= self.domain_quota).drop(
-                    "_rk", "_dom"
-                )
-                leftover = (
-                    ranked.filter(F.col("_rk") > self.domain_quota)
-                    .drop("_rk", "_dom")
-                    .select("job_id", "url", "depth", "ord")
-                )
-            elif self.robots is not None:
-                from website_to_agent_spark.operators.politeness import (
-                    polite_drain,
-                )
-
-                # priority composes with politeness: per-host quotas
-                # stay the hard constraint; WITHIN a host's quota the
-                # highest-scored urls drain first (_prio = -score so
-                # the ascending order_cols contract holds; unscored →
-                # +inf → after every scored row; salting stays keyed
-                # on ord — a per-host-constant score would collapse a
-                # hot host into one salt bucket)
-                drain_in = live
-                order_cols: tuple = ("ord",)
-                if self.priority is not None or self.opic:
-                    _sc = (
-                        self._join_cash(live, opic_cash)
-                        if self.opic else self._join_scores(live)
-                    )
-                    drain_in = _sc.withColumn(
-                        "_prio",
-                        -F.coalesce(F.col("score"), F.lit(float("-inf"))),
-                    ).drop("score")
-                    order_cols = ("_prio", "ord")
-                batch, left_df = polite_drain(
-                    drain_in, self.robots, superstep_secs=self.superstep_secs,
-                    superstep=step, salt_buckets=self.drain_salt_buckets,
-                    order_cols=order_cols, salt_col="ord",
-                )
-                if self.priority is not None or self.opic:
-                    w_pop = Window.partitionBy("job_id").orderBy(
-                        "_prio", "ord"
-                    )
-                    batch = batch.withColumn(
-                        "_pop", F.row_number().over(w_pop)
-                    ).drop("_prio")
-                leftover = left_df.select("job_id", "url", "depth", "ord")
-            else:
-                batch = live
-                leftover = None
+            # ---- drain batch (O2/O4) ----------------------------------
+            batch, leftover = self._drain(live, step, opic_cash)
 
             if self.mode == "seeder":
                 # depth-capped rows consume their batch slots first
@@ -758,10 +754,12 @@ class CrawlEngine:
             # anti-join and the leftover frontier — persist it lazily
             # for the step so the first consuming job computes the
             # (batch-bounded) rows once and the rest read cache.
-            fetch_caches: list = []
+            # Lazy per-step caches (this one and the seen-filter probe)
+            # are dropped right after the frontier materializes.
+            step_caches: list = []
             if pages is not None and leftover is not None:
                 batch = batch.persist()
-                fetch_caches.append(batch)
+                step_caches.append(batch)
             if redirect_edges_df is not None:
                 fetched = self._fetch_following(
                     batch, pages, redirect_edges_df, pages_urls
@@ -822,24 +820,19 @@ class CrawlEngine:
             # scraped_set ∪ queue membership checks
             # (`crawl4ai_client.py:271-276`).
             if self.robots is not None:
-                from website_to_agent_spark.operators.politeness import (
-                    robots_filter,
-                )
-
                 candidates = robots_filter(candidates, self.robots)
 
             if self.trap_max_urls is not None and trap_counts is not None:
-                from website_to_agent_spark.operators import traps as traps_mod
-
                 host_c = F.lower(urlfns.netloc(F.col("url")))
-                tmpl_c = traps_mod.url_template(F.col("url"))
+                tmpl_c = traps.url_template(F.col("url"))
                 capped = trap_counts.filter(
                     F.col("n") >= self.trap_max_urls
                 ).select("job_id", "_th", "_tt")
                 keyed = candidates.withColumn("_th", host_c).withColumn(
                     "_tt", tmpl_c
                 )
-                dropped = (
+                record(
+                    "trap_drops",
                     keyed.join(F.broadcast(capped),
                                ["job_id", "_th", "_tt"], "left_semi")
                     .groupBy(
@@ -848,11 +841,8 @@ class CrawlEngine:
                         F.col("_tt").alias("template"),
                     )
                     .agg(F.count("*").alias("dropped"))
-                    .withColumn("superstep", F.lit(step).cast("int"))
-                    .localCheckpoint(eager=True)
+                    .withColumn("superstep", F.lit(step).cast("int")),
                 )
-                trap_drop_parts.append(dropped)
-                retained.append(dropped)
                 candidates = keyed.join(
                     F.broadcast(capped), ["job_id", "_th", "_tt"],
                     "left_anti",
@@ -916,58 +906,31 @@ class CrawlEngine:
                 _prev_opic = opic_cash
                 opic_cash = new_oc
 
-            # per-step lazy caches (the bloom probe) — populated inside
-            # the frontier materialization job, dropped right after it
-            step_caches: list = []
-            if self.use_bloom:
-                # Bloom prefilter (SURVEY §4.3): negatives bypass the
+            if self._seen_filter is not None:
+                # URL-seen prefilter (SURVEY §4.3): negatives bypass the
                 # anti-join shuffle; positives get the exact check.
                 # Maintained INCREMENTALLY: built once from the
                 # accumulated seen set (just the seeds at a fresh
-                # start), then OR-merged with each step's delta — O(Δ)
+                # start), then folded with each step's delta — O(Δ)
                 # per superstep, never a full-seen rebuild.
-                dom = urlfns.reg_domain(urlfns.host(F.col("url")))
-                cand_dom = candidates.withColumn("reg_domain", dom)
-                if self.seen_filter == "bloom":
-                    from website_to_agent_spark.operators import bloom as bloom_mod
-
-                    if blooms is None:
-                        blooms = bloom_mod.build_blooms(
-                            seen.select(dom.alias("reg_domain"), "url"),
-                            n_bits=self.bloom_bits,
-                        ).localCheckpoint(eager=True)
-                    cand = bloom_mod.bloom_anti_join(
-                        cand_dom,
-                        seen.select("job_id", "url"),
-                        blooms,
-                        join_keys=["job_id", "url"],
-                        n_bits=self.bloom_bits,
-                        cache_out=step_caches,
-                    ).drop("reg_domain")
-                else:
-                    from website_to_agent_spark.operators import cuckoo as ck
-
-                    if blooms is None:
-                        blooms = ck.build_cuckoos(
-                            seen.select(dom.alias("reg_domain"), "url"),
-                            n_buckets=self.cuckoo_buckets,
-                            slots=self.cuckoo_slots,
-                        ).localCheckpoint(eager=True)
-                    cand = ck.cuckoo_anti_join(
-                        cand_dom,
-                        seen.select("job_id", "url"),
-                        blooms,
-                        join_keys=["job_id", "url"],
-                        n_buckets=self.cuckoo_buckets,
-                        slots=self.cuckoo_slots,
-                    ).drop("reg_domain")
+                if filter_table is None:
+                    filter_table = self._seen_filter.build(
+                        seen.select(_reg_domain().alias("reg_domain"), "url"),
+                    ).localCheckpoint(eager=True)
+                cand = self._seen_filter.anti_join(
+                    candidates.withColumn("reg_domain", _reg_domain()),
+                    seen.select("job_id", "url"),
+                    filter_table,
+                    join_keys=["job_id", "url"],
+                    cache_out=step_caches,
+                ).drop("reg_domain")
             else:
                 cand = candidates.join(
                     seen.select("job_id", "url"), ["job_id", "url"], "left_anti"
                 )
             if redir_finals is not None:
                 # batch-bounded set → broadcast anti-join; also covers
-                # the bloom path (the finals are not in the filter yet
+                # the prefilter path (the finals are not in the filter yet
                 # this step, so a probe negative would slip through)
                 cand = cand.join(
                     F.broadcast(redir_finals.select("job_id", "url")),
@@ -1010,45 +973,37 @@ class CrawlEngine:
                 "depth",
                 (F.col("next_ord") + F.col("rank") - 1).alias("ord"),
             ).localCheckpoint(eager=True)
-            # the eager materialization above ran the bloom/cuckoo
+            # the eager materialization above ran the seen-filter
             # probe, which fully computes (broadcast-exchanges) the
             # previous step's LAZY filter merge — its parent blocks
             # are now safely dead
             for df in pending_release:
                 _release_checkpoint(df)
             pending_release.clear()
+            # the frontier snapshot is materialized — the per-step
+            # caches (the batch, consumed by the bundle subtree and, in
+            # opic mode, the cash fold; the seen-filter probe) are dead
             for df in step_caches:
                 df.unpersist()
-            step_caches.clear()
-            # the frontier snapshot is materialized — the per-step
-            # fetch-hits/batch caches (consumed by the bundle subtree
-            # and, in opic mode, the cash fold) are dead
-            for df in fetch_caches:
-                df.unpersist()
-            fetch_caches.clear()
 
             if self.trap_max_urls is not None:
-                from website_to_agent_spark.operators import traps as traps_mod
-
                 inc = (
                     new_frontier_rows.select(
                         "job_id",
                         F.lower(urlfns.netloc(F.col("url"))).alias("_th"),
-                        traps_mod.url_template(F.col("url")).alias("_tt"),
+                        traps.url_template(F.col("url")).alias("_tt"),
                     )
                     .groupBy("job_id", "_th", "_tt")
                     .agg(F.count("*").alias("n"))
                 )
-                if trap_counts is None:
-                    new_tc = inc.localCheckpoint(eager=True)
-                else:
-                    new_tc = (
+                if trap_counts is not None:
+                    inc = (
                         trap_counts.unionByName(inc)
                         .groupBy("job_id", "_th", "_tt")
                         .agg(F.sum("n").alias("n"))
-                        .localCheckpoint(eager=True)
                     )
-                    _release_checkpoint(trap_counts)
+                new_tc = inc.localCheckpoint(eager=True)
+                _release_checkpoint(trap_counts)
                 trap_counts = new_tc
             _t_frontier = time.time()
             _j_frontier = _jid()
@@ -1084,18 +1039,15 @@ class CrawlEngine:
                 # enqueue-time check.) The anti-join keeps seen a set;
                 # its left side is batch-bounded, the per-step cost the
                 # candidate dedup already pays.
-                _chains = (
+                record(
+                    "redirects",
                     bundle.filter(
                         (F.col("n_hops") > 0) | (~F.col("redirect_ok"))
-                    )
-                    .select(
+                    ).select(
                         "job_id", "url", "final_url", "n_hops",
                         "redirect_ok", "superstep",
-                    )
-                    .localCheckpoint(eager=True)
+                    ),
                 )
-                redirect_parts.append(_chains)
-                retained.append(_chains)
                 redir_seen = redir_finals.join(
                     seen.select("job_id", "url"),
                     ["job_id", "url"],
@@ -1103,46 +1055,23 @@ class CrawlEngine:
                 )
                 seen_delta = seen_delta.unionByName(redir_seen)
             if snap is not None:
-                _reval = (
-                    bundle.filter(F.col("reused"))
-                    .select("job_id", "url", "superstep")
-                    .localCheckpoint(eager=True)
-                )
-                reval_parts.append(_reval)
-                retained.append(_reval)
+                record("revalidated", bundle.filter(F.col("reused"))
+                       .select("job_id", "url", "superstep"))
             if self.honor_meta_robots:
-                _noidx = (
-                    bundle.filter(F.col("robots_noindex"))
-                    .select("job_id", "url", "superstep")
-                    .localCheckpoint(eager=True)
-                )
-                noindex_parts.append(_noidx)
-                retained.append(_noidx)
-            if self.use_bloom:
-                dom = urlfns.reg_domain(urlfns.host(F.col("url")))
+                record("noindexed", bundle.filter(F.col("robots_noindex"))
+                       .select("job_id", "url", "superstep"))
+            if self._seen_filter is not None:
                 # the delta includes redirect FINALS (seen_delta, not
                 # just the frontier rows) so the prefilter agrees with
-                # the exact set
-                delta = seen_delta.select(
-                    dom.alias("reg_domain"), "url"
-                )
-                if self.seen_filter == "bloom":
-                    from website_to_agent_spark.operators import bloom as bloom_mod
-
-                    # single cogrouped fold: one delta shuffle + one
-                    # grouped kernel per superstep (r4 — replaces the
-                    # build-then-merge pair, byte-identical output)
-                    merged = bloom_mod.add_to_blooms(
-                        blooms, delta, n_bits=self.bloom_bits,
-                    ).localCheckpoint(eager=False)
-                else:
-                    from website_to_agent_spark.operators import cuckoo as ck
-
-                    merged = ck.add_to_cuckoos(
-                        blooms, delta,
-                        n_buckets=self.cuckoo_buckets,
-                        slots=self.cuckoo_slots,
-                    ).localCheckpoint(eager=False)
+                # the exact set. Bloom: a single cogrouped fold — one
+                # delta shuffle + one grouped kernel per superstep (r4
+                # — replaces the build-then-merge pair, byte-identical
+                # output).
+                merged = self._seen_filter.fold(
+                    filter_table,
+                    seen_delta.select(_reg_domain().alias("reg_domain"),
+                                      "url"),
+                ).localCheckpoint(eager=False)
                 # LAZY checkpoint (r4): the merge materializes inside
                 # the next step's probe (a broadcast exchange computes
                 # every partition) instead of costing its own eager job
@@ -1150,8 +1079,8 @@ class CrawlEngine:
                 # AFTER that job runs (pending_release), and a crawl
                 # that ends before then just abandons the un-run merge
                 # — nothing consumes it after the loop.
-                pending_release.append(blooms)
-                blooms = merged
+                pending_release.append(filter_table)
+                filter_table = merged
             frontier = new_frontier_rows
             if leftover is not None:
                 frontier = frontier.unionByName(leftover)
@@ -1188,16 +1117,15 @@ class CrawlEngine:
             # when the accumulated seen set is 10^10 rows. The anti-join
             # probes the union of materialized deltas (at cluster scale:
             # one Iceberg table receiving appends).
+            deltas = {
+                "crawled_delta": new_crawled,
+                "metrics_delta": step_metrics,
+                "seen_delta": seen_delta,
+            }
             if self.catalog is not None:
                 self.catalog.commit(
                     step,
-                    {
-                        "frontier": frontier,
-                        "job_state": job_state,
-                        "crawled_delta": new_crawled,
-                        "metrics_delta": step_metrics,
-                        "seen_delta": seen_delta,
-                    },
+                    {"frontier": frontier, "job_state": job_state, **deltas},
                     lineage={"mode": self.mode, "step": step},
                     bucket=(
                         {"frontier": (["job_id"], self.bucket_frontier)}
@@ -1206,15 +1134,7 @@ class CrawlEngine:
                     ),
                 )
                 frontier = self.catalog.read(self.spark, step, "frontier")
-                seen = seen.unionByName(
-                    self.catalog.read(self.spark, step, "seen_delta")
-                )
-                crawled_parts.append(
-                    self.catalog.read(self.spark, step, "crawled_delta")
-                )
-                metrics_parts.append(
-                    self.catalog.read(self.spark, step, "metrics_delta")
-                )
+                absorb(partial(self.catalog.read, self.spark, step))
                 # everything downstream now reads the committed disk
                 # snapshots — this step's in-memory bundle and frontier
                 # rows are dead; release them so executor storage stays
@@ -1230,12 +1150,10 @@ class CrawlEngine:
                     frontier = frontier.localCheckpoint(eager=True)
                     _release_checkpoint(prev_frontier_ckpt)
                     prev_frontier_ckpt = frontier
-                seen = seen.unionByName(seen_delta)
-                crawled_parts.append(new_crawled)
-                metrics_parts.append(step_metrics)
+                absorb(deltas.__getitem__)
                 retained.append(bundle)
                 retained.append(new_frontier_rows)
-            if self.opic and _prev_opic is not None:
+            if _prev_opic is not None:
                 # frontier/job_state snapshots are materialized — the
                 # superseded cash state is now safely dead
                 _release_checkpoint(_prev_opic)
@@ -1263,7 +1181,7 @@ class CrawlEngine:
         # the loop consumes it; release it here so a catalog-backed run
         # returns with only the final bloom pinned (test_scale_path)
         _release_checkpoint(pages_urls)
-        for handle in (prev_frontier_ckpt, blooms,
+        for handle in (prev_frontier_ckpt, filter_table,
                        trap_counts, redirect_edges_df, opic_cash):
             if handle is not None:
                 retained.append(handle)
@@ -1276,29 +1194,81 @@ class CrawlEngine:
             metrics=_union_all(spark, schema.METRICS, metrics_parts),
             supersteps=step - start_step, job_state=self._job_state_df(js),
             checkpoints=retained,
-            trap_drops=_union_all(
-                spark,
-                "job_id string, host string, template string,"
-                " dropped long, superstep int",
-                trap_drop_parts,
-            ) if self.trap_max_urls is not None else None,
-            redirects=_union_all(
-                spark,
-                "job_id string, url string, final_url string,"
-                " n_hops int, redirect_ok boolean, superstep int",
-                redirect_parts,
-            ) if redirect_edges_df is not None else None,
-            revalidated=_union_all(spark, _URL_STEP_DDL, reval_parts)
-            if snap is not None else None,
-            noindexed=_union_all(spark, _URL_STEP_DDL, noindex_parts)
-            if self.honor_meta_robots else None,
             opic=opic_cash,
+            **{
+                name: _union_all(spark, ddl, side_parts[name])
+                if name in side_parts else None
+                for name, ddl in _SIDE_TABLE_DDL.items()
+            },
         )
 
+    # -------------------------------------------------------------- drain
+    def _drain(self, live: DataFrame, step: int,
+               opic_cash: Optional[DataFrame]):
+        """Split the live frontier into this superstep's ``(batch,
+        leftover)``; ``leftover`` (the frontier columns) is None when
+        the whole frontier drains.
+
+        Precedence: ``batch_per_job`` (per-job FIFO prefix, or the
+        ranked priority-queue prefix when scores are given), then
+        ``domain_quota`` (per-(job, registrable domain) FIFO prefix),
+        then the ``robots`` politeness drain, else everything. Under a
+        score (priority table or OPIC cash) the batch carries ``_pop``
+        — the ranked pop order _client_step's budget window follows
+        instead of ord."""
+        if self.batch_per_job is None and self.domain_quota is not None:
+            ranked = _ranked(live.withColumn("_dom", _reg_domain()),
+                             ("job_id", "_dom"), ("ord",))
+            return _ranked_split(ranked.drop("_dom"), self.domain_quota)
+        if self.batch_per_job is None and self.robots is None:
+            return live, None
+        scored = self.priority is not None or self.opic
+        if scored:
+            live = self._join_scores(live, opic_cash)
+        if self.batch_per_job is not None:
+            order = (F.desc_nulls_last("score"), "ord") if scored else ("ord",)
+            ranked = _ranked(live, ("job_id",), order)
+            if scored:
+                ranked = ranked.withColumn("_pop", F.col("_rk")).drop("score")
+            return _ranked_split(ranked, self.batch_per_job)
+        # priority composes with politeness: per-host quotas stay the
+        # hard constraint; WITHIN a host's quota the highest-scored
+        # urls drain first (_prio = -score so the ascending order_cols
+        # contract holds; unscored → +inf → after every scored row;
+        # salting stays keyed on ord — a per-host-constant score would
+        # collapse a hot host into one salt bucket)
+        order_cols: tuple = ("ord",)
+        if scored:
+            live = live.withColumn(
+                "_prio", -F.coalesce(F.col("score"), F.lit(float("-inf"))),
+            ).drop("score")
+            order_cols = ("_prio", "ord")
+        batch, leftover = polite_drain(
+            live, self.robots, superstep_secs=self.superstep_secs,
+            superstep=step, salt_buckets=self.drain_salt_buckets,
+            order_cols=order_cols, salt_col="ord",
+        )
+        if scored:
+            batch = _ranked(batch, ("job_id",), order_cols,
+                            "_pop").drop("_prio")
+        return batch, leftover.select(*_FRONTIER_COLS)
+
     # ------------------------------------------------------------ scores
-    def _join_scores(self, live: DataFrame) -> DataFrame:
-        """Attach the broadcast priority table's ``score`` to frontier
-        rows (url- or host-keyed; unmatched rows keep score null)."""
+    def _join_scores(self, live: DataFrame,
+                     opic_cash: Optional[DataFrame]) -> DataFrame:
+        """Attach the drain ``score`` to frontier rows (unmatched rows
+        keep score null). Under OPIC it is the cash state: a co-keyed
+        hash join — the cash table is frontier-sized, NEVER broadcast;
+        cash is already 12-dp rounded by the fold, so score ties break
+        deterministically on ord. Otherwise it is the broadcast
+        priority table, url- or host-keyed."""
+        if self.opic:
+            return live.join(
+                opic_cash.select(
+                    "job_id", "url", F.col("cash").alias("score")
+                ),
+                ["job_id", "url"], "left",
+            )
         if self.priority_on == "url":
             return live.join(F.broadcast(self.priority), "url", "left")
         return (
@@ -1308,20 +1278,6 @@ class CrawlEngine:
                 "_ph", "left",
             )
             .drop("_ph")
-        )
-
-    @staticmethod
-    def _join_cash(live: DataFrame, opic_cash: DataFrame) -> DataFrame:
-        """Attach the OPIC cash state as the drain score. Co-keyed
-        hash join — the cash table is frontier-sized, NEVER broadcast
-        (unlike the static priority table). Cash is already 12-dp
-        rounded by the fold, so score ties break deterministically on
-        ord."""
-        return live.join(
-            opic_cash.select(
-                "job_id", "url", F.col("cash").alias("score")
-            ),
-            ["job_id", "url"], "left",
         )
 
     # -------------------------------------------------------------- fetch
@@ -1356,11 +1312,7 @@ class CrawlEngine:
         ``final_url``/``n_hops``/``redirect_ok`` columns — downstream
         steps use them for the extraction base url, the seen-set
         delta, and the redirects result table."""
-        from website_to_agent_spark.operators import redirects as redirects_mod
-
-        res = redirects_mod.resolve_redirects(
-            batch.select("url"), edges, max_hops=self.redirect_max_hops
-        )
+        res = resolve_redirects(batch.select("url"), edges)
         b = batch.join(F.broadcast(res), "url", "left")
         too_many = b.filter(~F.col("redirect_ok")).select(
             "*", *_miss_columns(pages, "p_url", _FETCH_FLAGS)
@@ -1392,8 +1344,6 @@ class CrawlEngine:
         The content-type check is F9's case-insensitive one
         (`filters.content_type_ok` — headers arrive in arbitrary case).
         """
-        from website_to_agent_spark.sources.httpfetch import http_fetch
-
         got = http_fetch(
             batch.select("url").distinct(), timeout_s=self.fetch_timeout_s
         )
@@ -1621,23 +1571,21 @@ class CrawlEngine:
         # and release it after the bundle checkpoint.
         fetched = fetched.localCheckpoint(eager=True)
         html_ok = F.col("success") & F.col("html_ok")
+        # one-parse links+directives kernel; the directives are read
+        # only under honor_meta_robots
+        ok = fetched.filter(html_ok).withColumn(
+            "_sm", seeder_links_meta_udf(F.col("html"), self._base_url())
+        )
+        payload = {"links": F.col("_sm.links")}
         if self.honor_meta_robots:
-            # one-parse links+directives kernel; a page-level nofollow
-            # page yields no links (still visited — it consumes its
-            # batch slot like the reference's non-HTML skip)
-            ok = fetched.filter(html_ok).withColumn(
-                "_sm", seeder_links_meta_udf(F.col("html"), self._base_url())
-            )
+            # a page-level nofollow page yields no links (still visited
+            # — it consumes its batch slot like the reference's
+            # non-HTML skip)
             payload = {f: F.col("_sm." + f) for f in _META_FIELDS}
             payload["links"] = F.when(
                 F.coalesce(F.col("_sm.robots_nofollow"), F.lit(False)),
                 F.array().cast(_PAYLOAD_TYPES["links"]),
             ).otherwise(F.col("_sm.links"))
-        else:
-            ok = fetched.filter(html_ok).withColumn(
-                "links", seeder_links_udf(F.col("html"), self._base_url())
-            )
-            payload = {"links": F.col("links")}
         # failed ∪ skipped-non-HTML: both get null links; `success` is
         # kept as-is so the skipped rows stay out of n_failed.
         bundle = (

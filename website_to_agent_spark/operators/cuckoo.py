@@ -38,6 +38,8 @@ import hashlib
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from website_to_agent_spark.operators.bloom import prefiltered_anti_join
+
 _MAX_KICKS = 500
 
 
@@ -206,17 +208,13 @@ def probe_cuckoos(candidates: DataFrame, table: DataFrame,
 def cuckoo_anti_join(candidates: DataFrame, seen: DataFrame,
                      table: DataFrame, join_keys: list[str],
                      key_col: str = "reg_domain",
-                     n_buckets: int = 1 << 12, slots: int = 4) -> DataFrame:
-    """Exact NOT-EXISTS semantics with the cuckoo as prefilter —
+                     n_buckets: int = 1 << 12, slots: int = 4,
+                     cache_out: list | None = None) -> DataFrame:
+    """:func:`bloom.prefiltered_anti_join` with the cuckoo probe —
     drop-in for ``bloom.bloom_anti_join``."""
     probed = probe_cuckoos(candidates, table, key_col=key_col,
                            n_buckets=n_buckets, slots=slots)
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified_new = maybe.join(
-        seen.select(*join_keys), join_keys, "left_anti"
-    )
-    return definitely_new.unionByName(verified_new)
+    return prefiltered_anti_join(probed, seen, join_keys, cache_out)
 
 
 def cuckoo_stats(table: DataFrame, n_buckets: int = 1 << 12,

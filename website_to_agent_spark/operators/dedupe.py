@@ -490,7 +490,17 @@ def simhash_append(df: DataFrame, text_col: str = "text",
     hashlib matches the conv(md5-prefix) form), and takes the bit
     majority with one vectorized vote count. Rows whose text has no
     tokens get NULL (the rows the aggregate form simply omitted);
-    integer votes make the result exactly the aggregate form's."""
+    integer votes make the result exactly the aggregate form's.
+
+    Locale caveat on that parity: the kernel lowercases with Python
+    ``str.lower()`` (locale-independent), the aggregate form with
+    Spark's ``lower()``, whose non-ASCII path is Java
+    ``String.toLowerCase()`` in the JVM's DEFAULT locale. The two
+    agree only under a Locale.ROOT-like default (e.g. en/US); under a
+    Turkish default ``'I'`` lowercases to ``'ı'`` JVM-side but
+    ``'i'`` here, so fingerprints of such text would differ from the
+    column form. This function's own output does not depend on the
+    JVM locale."""
     import re as _re
 
     from pyspark.sql import types as T

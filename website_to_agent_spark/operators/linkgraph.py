@@ -78,7 +78,7 @@ def page_link_edges(pages: DataFrame, urls: Optional[DataFrame] = None) -> DataF
     `url_seeder.py:132,143-174` semantics). ``urls`` (a 1-column
     DataFrame) restricts extraction to a crawled subset — broadcast
     semi-join, so the huge store is filtered before the UDF runs."""
-    from website_to_agent_spark.functions.extract import seeder_links_udf
+    from website_to_agent_spark.functions.extract import seeder_links_meta_udf
 
     p = pages.select("url", "html")
     if urls is not None:
@@ -86,7 +86,9 @@ def page_link_edges(pages: DataFrame, urls: Optional[DataFrame] = None) -> DataF
     return (
         p.select(
             F.col("url").alias("src"),
-            F.explode(seeder_links_udf(F.col("html"), F.col("url"))).alias("link"),
+            F.explode(
+                seeder_links_meta_udf(F.col("html"), F.col("url")).links
+            ).alias("link"),
         )
         .select(
             "src",
