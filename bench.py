@@ -1243,7 +1243,7 @@ def main() -> None:
 
     # token-window packing over deterministic id arrays (~129 ids/doc):
     # this row times the PACKING dataflow (prefix-sum window + slice
-    # explode + window reassembly), not the BPE kernel
+    # explode + window reassembly), not a tokenizer
     ids_docs = docs.select(
         "doc_id",
         F.transform(

@@ -268,32 +268,6 @@ def test_pack_token_windows_gpt_style(spark):
     assert other != {k: list(v.input_ids) for k, v in got.items()}
 
 
-def test_bpe_ids_and_pack_compose(spark):
-    """bpe_encode_ids_udf ids mirror bpe_encode_udf tokens through
-    bpe_vocab; the ids feed pack_token_windows end-to-end (the full
-    tokenize→pack funnel tail)."""
-    from website_to_agent_spark.operators import bpe, sampling
-
-    docs = spark.createDataFrame(
-        [(i, "the cat sat on the mat and the cat ran " * (i % 3 + 1))
-         for i in range(12)],
-        "doc_id long, text string")
-    merges = bpe.train_bpe(docs, n_merges=20)
-    vocab = bpe.bpe_vocab(merges)
-    toks = docs.select(
-        "doc_id", bpe.bpe_encode_udf(merges)(F.col("text")).alias("t"),
-        bpe.bpe_encode_ids_udf(merges)(F.col("text")).alias("ids"))
-    for r in toks.collect():
-        assert [vocab[t] for t in r.t] == list(r.ids)
-    eos = vocab["<eos>"]
-    packed = sampling.pack_token_windows(toks, "doc_id", "ids", 32, 2, eos)
-    rows = packed.collect()
-    assert sum(r.n_ids for r in rows) == sum(
-        len(r.ids) + 1 for r in toks.collect())
-    assert all(max(r.input_ids) <= eos for r in rows)
-    assert sum(1 for r in rows if not r.complete) <= 2  # ≤1 per shard
-
-
 def _es_mirror(rows, salt="wsample-v1"):
     """Exact Python mirror of es_key: ln(md5-60-bit-uniform)/w."""
     import hashlib

@@ -132,8 +132,8 @@ def banded_candidate_pairs(banded: DataFrame, id_col: str, val_col: str,
     the upstream pipeline TWICE (no common-subexpression reuse across
     join sides in Catalyst), and for every banding operator here the
     upstream is the expensive part — the shingle explode + k min-aggs
-    for MinHash, the token explode + per-bit sums for SimHash, the
-    image decode kernel for phash. One groupBy computes it once.
+    for MinHash, the token explode + per-bit sums for SimHash. One
+    groupBy computes it once.
 
     Returns (doc_a, doc_b, val_a, val_b) with doc_a < doc_b.
 

@@ -26,6 +26,25 @@ def _ensure_worker_pythonpath() -> None:
         )
 
 
+def physical_memory_bytes() -> int:
+    """Memory this process can use: physical RAM, or the cgroup v2
+    ``memory.max`` limit when that is a number and smaller."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        return total
+    return min(total, int(limit)) if limit.isdigit() else total
+
+
+def default_driver_memory() -> str:
+    """One third of physical memory, capped at 24g: leaves room for the
+    Python workers and the page cache beside the driver JVM."""
+    mb = min(physical_memory_bytes() // 3, 24 << 30) >> 20
+    return f"{mb >> 10}g" if mb >= 1024 else f"{mb}m"
+
+
 def get_spark(
     app_name: str = "website_to_agent_spark",
     cores: int | None = None,
@@ -33,7 +52,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     _ensure_worker_pythonpath()
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -46,7 +65,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big HTML blobs → keep Arrow batches bounded
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # r6: floor the SCAN parallelism at the core count (guide §6 —
