@@ -26,7 +26,7 @@ def test_frontier_pages_fetch_join_is_broadcast(spark, pages_df, site, user):
     side and broadcast the frontier batch — a sort-merge fallback here
     would shuffle the whole page store (or snapshot table) every
     superstep. Hit and miss rows both come back."""
-    from website_to_agent_spark.operators import recrawl, redirects
+    from website_to_agent_spark.operators import recrawl
     from website_to_agent_spark.operators.crawl import CrawlEngine
 
     seed, missing = site.seeds[0], "https://missing/x"
@@ -48,8 +48,9 @@ def test_frontier_pages_fetch_join_is_broadcast(spark, pages_df, site, user):
         ])
         frontier = frontier.unionByName(spark.createDataFrame(
             [("j", alias, 0, 2)], frontier.schema))
-        fetched = CrawlEngine(spark, store)._fetch_following(
-            frontier, pages, redirects.redirect_edges(store))
+        closure = CrawlEngine._redirect_closure(store)
+        fetched = CrawlEngine._fetch_following(
+            CrawlEngine._attach_redirects(frontier, closure), pages)
     else:
         crawled = spark.createDataFrame(
             [(seed, True, "t", None, [], "x", "x", "x")],

@@ -494,7 +494,7 @@ def test_resolve_redirects_matches_python_walker(spark):
     got = {r.url: (r.final_url, r.n_hops, r.redirect_ok)
            for r in res.collect()}
     assert got == want
-    # whole-store form agrees with the batch form
+    # the whole-store form (materialized edge table) agrees
     got2 = {r.url: (r.final_url, r.n_hops, r.redirect_ok)
             for r in rd.final_destinations(pages, max_hops=max_hops).collect()}
     assert got2 == want

@@ -143,23 +143,86 @@ def test_seeder_mode_follows_redirects(spark, redirect_site):
     res.unpersist()
 
 
+def _jobs_per_superstep(spark, store, group, **kw):
+    """Mean Spark jobs per superstep of one client crawl of ``store``,
+    counted through the public status API (the run's jobs carry their
+    own job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = CrawlEngine(spark, store, mode="client", **kw).run(
+            [CrawlJob("j", f"{H}/seed.html", max_urls=10)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    steps = res.supersteps
+    res.unpersist()
+    return n_jobs / steps
+
+
+def test_redirect_superstep_job_overhead_bounded(spark, redirect_site):
+    """Following redirects costs a small constant number of Spark jobs
+    per superstep over the same crawl of the plain store: the chains
+    resolve once per crawl, not once per superstep."""
+    robots = spark.createDataFrame(
+        [("www.rsite.example.com", [], 0.01)],
+        "host string, disallow array<string>, crawl_delay double",
+    )
+    plain = redirect_site.drop("redirect_to")
+    for tag, kw in (("default", {}),
+                    ("bloom_robots", dict(use_bloom=True, robots=robots))):
+        redir = _jobs_per_superstep(spark, redirect_site,
+                                    f"redir-{tag}", **kw)
+        base = _jobs_per_superstep(spark, plain, f"plain-{tag}", **kw)
+        assert redir <= base + 20, (tag, redir, base)
+
+
+def _redirect_crawl_rows(res):
+    return ([(r.url, r.success, r.text)
+             for r in res.crawled.orderBy("fetch_ord").collect()],
+            sorted(r.url for r in res.seen.collect()))
+
+
+def test_redirect_crawl_resumes_and_releases_closure(spark, redirect_site,
+                                                     tmp_path):
+    """A redirect crawl interrupted after one superstep and resumed by
+    a fresh engine (which rebuilds the redirect closure) equals one
+    uninterrupted run: ordered crawled rows and the seen set. After
+    unpersist(), executor storage is back to its level before the
+    run: neither the closure nor the edge table it was walked over
+    stays pinned."""
+    from test_scale_path import _cached_rdd_ids, _wait_until
+
+    jobs = [CrawlJob("j", f"{H}/seed.html", max_urls=10)]
+    before = _cached_rdd_ids(spark)
+    full = CrawlEngine(spark, redirect_site, mode="client").run(jobs)
+    want = _redirect_crawl_rows(full)
+    full.unpersist(blocking=True)
+    assert _wait_until(lambda: not (_cached_rdd_ids(spark) - before)), (
+        _cached_rdd_ids(spark) - before
+    )
+    ckpt = str(tmp_path / "ckpt")
+    CrawlEngine(spark, redirect_site, mode="client", checkpoint_dir=ckpt,
+                max_supersteps=1).run(jobs).unpersist()
+    resumed = CrawlEngine(spark, redirect_site, mode="client",
+                          checkpoint_dir=ckpt).run(jobs, resume=True)
+    assert _redirect_crawl_rows(resumed) == want
+    resumed.unpersist()
+
+
 def test_failed_chain_on_duplicate_src_edges_one_row(spark):
     """A chain that fails on a url with several outgoing edges
     (duplicate-src rows, e.g. two store snapshots of one redirect
-    page) still yields ONE row per input url, and the broadcast and
-    whole-store forms agree."""
+    page) still yields ONE row per input url."""
     edges = spark.createDataFrame(
         [(f"{H}/a", f"{H}/b"), (f"{H}/b", f"{H}/c"), (f"{H}/b", f"{H}/c"),
          (f"{H}/b", f"{H}/d")],
         "src string, dst string",
     )
     urls = spark.createDataFrame([(f"{H}/a",), (f"{H}/z",)], "url string")
-    forms = [
-        sorted(tuple(r) for r in rd.resolve_redirects(
-            urls, edges, max_hops=1, broadcast_urls=bc).collect())
-        for bc in (True, False)
-    ]
-    assert forms[0] == forms[1] == [
+    assert sorted(tuple(r) for r in rd.resolve_redirects(
+        urls, edges, max_hops=1).collect()) == [
         (f"{H}/a", f"{H}/b", 1, False),
         (f"{H}/z", f"{H}/z", 0, True),
     ]
@@ -209,19 +272,14 @@ def test_adaptive_crawl_delay(spark):
 
 
 def test_whole_store_form_has_no_broadcast_hints(spark, redirect_site):
-    """broadcast_urls=False (the corpus-scale canonicalization form)
-    must not FORCE broadcasts of mover/settled sets — at 10^8 redirect
-    rows a forced broadcast OOMs (review finding). AQE may still pick
-    broadcasts at runtime from actual sizes; the assertion is on the
-    forced hints only."""
+    """The chain walk (run over the whole store for url
+    canonicalization) must not FORCE broadcasts of mover sets — at
+    10^8 redirect rows a forced broadcast OOMs (review finding). AQE
+    may still pick broadcasts at runtime from actual sizes; the
+    assertion is on the forced hints only."""
     plan = rd.final_destinations(redirect_site)._jdf.queryExecution() \
         .analyzed().toString()
     assert "ResolvedHint" not in plan
-    batch_plan = rd.resolve_redirects(
-        redirect_site.select("url"), rd.redirect_edges(redirect_site),
-        broadcast_urls=True,
-    )._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in batch_plan
 
 
 def test_adaptive_delay_host_case_normalized(spark):

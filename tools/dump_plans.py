@@ -467,32 +467,41 @@ def main() -> None:
         "thousands of queries against one build.",
     )
 
-    # 20. redirect-chain resolution (r4-s6): per-superstep form
-    from website_to_agent_spark.operators import redirects as _rd
-
-    _redir_pages = docs.select(
+    # 20. redirect closure attach + fetch of the final url: the
+    # per-superstep part of redirect following (the closure itself is
+    # resolved and checkpointed once per crawl)
+    _redir_store = docs.select(
         F.format_string("https://r.ex.com/%d", F.col("doc_id")).alias("url"),
+        F.encode(F.col("text"), "UTF-8").alias("html"),
         F.when(
             F.col("doc_id") % 3 != 0,
             F.format_string("https://r.ex.com/%d", F.col("doc_id") - 1),
         ).alias("redirect_to"),
     )
     _redir_batch = docs.limit(8).select(
-        F.format_string("https://r.ex.com/%d", F.col("doc_id")).alias("url")
+        F.lit("j").alias("job_id"),
+        F.format_string("https://r.ex.com/%d", F.col("doc_id")).alias("url"),
+        F.lit(0).alias("depth"),
+        F.col("doc_id").cast("long").alias("ord"),
     )
     add(
-        "Redirect-chain resolution (per-superstep batch form)",
-        _rd.resolve_redirects(
-            _redir_batch, _rd.redirect_edges(_redir_pages), max_hops=3
+        "Redirect closure attach + fetch of the final url (per superstep)",
+        CrawlEngine._fetch_following(
+            CrawlEngine._attach_redirects(
+                _redir_batch, CrawlEngine._redirect_closure(_redir_store)
+            ),
+            _redir_store.select(F.col("url").alias("p_url"), "html"),
         ),
-        "Every hop is a BroadcastHashJoin probing the (store-scale) "
-        "edge table with the still-redirecting subset of the batch — "
-        "the edge side streams, never shuffles, and the probe side "
-        "shrinks each hop (most urls settle at hop 0). No Exchange "
-        "anywhere in the loop; the settle/move split reuses the "
-        "broadcast-inner + anti pattern of the fetch join. max_hops "
-        "bounds plan depth, so the plan is a fixed small tower, not "
-        "an unbounded iteration.",
+        "The redirect closure (url → final_url, n_hops, redirect_ok for "
+        "every redirect source) is resolved ONCE per crawl and "
+        "checkpointed — the scan of the checkpoint is the closure "
+        "side here. Per superstep it meets the drained batch in the "
+        "same broadcast-inner + broadcast-anti hit/miss join as the "
+        "fetch: the batch is broadcast, the closure streams, and a "
+        "miss is a url that does not redirect. The fetch is then the "
+        "ordinary J1 join keyed on final_url, plus the too-many-hops "
+        "rows as forced failures. No chain walk and no Exchange on "
+        "the store side per superstep.",
     )
 
     # 21. 304 revalidation status pass (r4-s6)

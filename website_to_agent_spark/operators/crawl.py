@@ -36,11 +36,11 @@ Scale notes (100 TB / 10^10-frontier design):
 - Everything is keyed by ``job_id`` — one engine run drives millions of
   independent crawl jobs; all windows are per-job, so parallelism is
   across jobs and pages, never a global sort.
-- The frontier⋈pages join (and the revalidation-snapshot attach) is
-  ``hit_miss_join``: the (small) drained frontier batch is broadcast
-  against the huge pages table, which streams and never shuffles; on a
-  cluster the pages table is bucketed by url hash so the probe is
-  partition-pruned.
+- The frontier⋈pages join (and the redirect-closure and
+  revalidation-snapshot attaches) is ``hit_miss_join``: the (small)
+  drained frontier batch is broadcast against the huge pages table,
+  which streams and never shuffles; on a cluster the pages table is
+  bucketed by url hash so the probe is partition-pruned.
 - Per-superstep state is checkpointed through ``SnapshotCatalog``
   (atomic manifest commit) and re-read, truncating lineage — killed
   jobs resume exactly (T5).
@@ -624,14 +624,12 @@ class CrawlEngine:
             if pages is not None
             else None
         )
-        # redirect edge table: one store scan, materialized once per
-        # crawl (a small fraction of rows), probed per superstep by
-        # broadcast joins of the batch — see _fetch_following.
-        redirect_edges_df: Optional[DataFrame] = None
+        # redirect closure: every redirect source's chain, resolved
+        # once per run() (so a catalog resume rebuilds it) and attached
+        # to each drained batch by one join — see _attach_redirects.
+        redirect_closure: Optional[DataFrame] = None
         if self._redir_cols:
-            redirect_edges_df = redirect_edges(
-                self.pages
-            ).localCheckpoint(eager=True)
+            redirect_closure = self._redirect_closure(self.pages)
         # revalidation snapshot (client mode only — the seeder extracts
         # nothing, so there is nothing to reuse)
         snap: Optional[DataFrame] = None
@@ -646,7 +644,7 @@ class CrawlEngine:
             name: []
             for name, on in (
                 ("trap_drops", self.trap_max_urls is not None),
-                ("redirects", redirect_edges_df is not None),
+                ("redirects", redirect_closure is not None),
                 ("revalidated", snap is not None),
                 ("noindexed", self.honor_meta_robots),
             )
@@ -756,14 +754,16 @@ class CrawlEngine:
             # (batch-bounded) rows once and the rest read cache.
             # Lazy per-step caches (this one and the seen-filter probe)
             # are dropped right after the frontier materializes.
+            # The redirect chain columns attach BEFORE the persist, so
+            # the fetch and snapshot joins read the cached rows.
             step_caches: list = []
+            if redirect_closure is not None:
+                batch = self._attach_redirects(batch, redirect_closure)
             if pages is not None and leftover is not None:
                 batch = batch.persist()
                 step_caches.append(batch)
-            if redirect_edges_df is not None:
-                fetched = self._fetch_following(
-                    batch, pages, redirect_edges_df, pages_urls
-                )
+            if redirect_closure is not None:
+                fetched = self._fetch_following(batch, pages, pages_urls)
             elif pages is not None:
                 fetched = self._fetch(batch, pages, pages_urls)
             else:
@@ -800,7 +800,7 @@ class CrawlEngine:
             # them (Heritrix/Nutch final-url dedup semantics; the
             # reference's exact-url client would refetch).
             redir_finals = None
-            if redirect_edges_df is not None:
+            if redirect_closure is not None:
                 redir_finals = (
                     bundle.filter(
                         F.col("success")
@@ -1182,7 +1182,7 @@ class CrawlEngine:
         # returns with only the final bloom pinned (test_scale_path)
         _release_checkpoint(pages_urls)
         for handle in (prev_frontier_ckpt, filter_table,
-                       trap_counts, redirect_edges_df, opic_cash):
+                       trap_counts, redirect_closure, opic_cash):
             if handle is not None:
                 retained.append(handle)
         # a final un-materialized lazy merge keeps its parent in
@@ -1300,25 +1300,47 @@ class CrawlEngine:
         return hit_miss_join(batch, pages, key, "p_url", keys=pages_urls,
                              flags=_FETCH_FLAGS)
 
-    def _fetch_following(
-        self, batch: DataFrame, pages: DataFrame, edges: DataFrame,
-        pages_urls: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """Redirect-aware store fetch: resolve each batch url's chain
-        (operators/redirects.py — max_hops rounds of broadcast probes
-        against the edge table), then ``_fetch`` the FINAL url.
-        Unresolved chains (loop / too many hops) are forced failures,
-        like requests' TooManyRedirects. Adds
-        ``final_url``/``n_hops``/``redirect_ok`` columns — downstream
-        steps use them for the extraction base url, the seen-set
-        delta, and the redirects result table."""
-        res = resolve_redirects(batch.select("url"), edges)
-        b = batch.join(F.broadcast(res), "url", "left")
-        too_many = b.filter(~F.col("redirect_ok")).select(
+    @staticmethod
+    def _redirect_closure(store: DataFrame) -> DataFrame:
+        """(``_ru``, ``final_url``, ``n_hops``, ``redirect_ok``) for
+        every redirect source of ``store`` — its chain walked once
+        (:func:`resolve_redirects` over the edge table) and
+        materialized: a small fraction of the store, fixed for the
+        crawl. The edge table it walked is released."""
+        edges = redirect_edges(store).localCheckpoint(eager=True)
+        closure = resolve_redirects(
+            edges.select(F.col("src").alias("url")), edges
+        ).withColumnRenamed("url", "_ru").localCheckpoint(eager=True)
+        _release_checkpoint(edges)
+        return closure
+
+    @staticmethod
+    def _attach_redirects(batch: DataFrame, closure: DataFrame) -> DataFrame:
+        """Add ``final_url``/``n_hops``/``redirect_ok`` to the drained
+        batch: a :func:`hit_miss_join` against the redirect closure; a
+        url that is no redirect source (a miss) is its own final url,
+        0 hops, ok. Downstream steps use the columns for the fetch, the
+        extraction base url, the seen-set delta and the redirects
+        result table."""
+        return hit_miss_join(batch, closure, "url", "_ru").select(
+            *batch.columns,
+            F.coalesce("final_url", "url").alias("final_url"),
+            F.coalesce("n_hops", F.lit(0)).alias("n_hops"),
+            F.coalesce("redirect_ok", F.lit(True)).alias("redirect_ok"),
+        )
+
+    @staticmethod
+    def _fetch_following(batch: DataFrame, pages: DataFrame,
+                         pages_urls: Optional[DataFrame] = None) -> DataFrame:
+        """Redirect-aware store fetch of an :meth:`_attach_redirects`
+        batch: ``_fetch`` the FINAL url. Unresolved chains (loop / too
+        many hops) are forced failures, like requests'
+        TooManyRedirects."""
+        too_many = batch.filter(~F.col("redirect_ok")).select(
             "*", *_miss_columns(pages, "p_url", _FETCH_FLAGS)
         )
-        return self._fetch(
-            b.filter(F.col("redirect_ok")), pages, pages_urls,
+        return CrawlEngine._fetch(
+            batch.filter(F.col("redirect_ok")), pages, pages_urls,
             key="final_url",
         ).unionByName(too_many)
 

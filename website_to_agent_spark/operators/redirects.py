@@ -15,21 +15,18 @@ the chain exceeds ``max_hops`` (requests' ``TooManyRedirects``;
 redirect loops hit the same cap — no separate cycle detector needed).
 
 Scale shape: the redirect EDGE table (url → absolute target) is a
-filter+project of the page store — a small fraction of rows —
-materialized once per crawl. Per superstep, resolution is ``max_hops``
-rounds of broadcast-INNER joins of the (tiny) still-redirecting batch
-subset against the edge table: the store-scale side streams and never
-shuffles, mirroring ``crawl.hit_miss_join``, and the
-probe side shrinks every hop (most urls settle at hop 0). The
-whole-store form (``final_destinations`` — redirect-aware url
-canonicalization feeding ``webtext.url_dedup``) uses plain hash joins
-instead (``broadcast_urls=False``): the mover set after hop 1 is
-bounded by the redirect-page count, not the corpus.
+filter+project of the page store — a small fraction of rows. The chain
+walk is ONE linear plan of ``max_hops`` plain LEFT hash joins against
+it (no forced broadcasts: the mover set is bounded by the redirect-page
+count, not the corpus). The crawl engine walks it once per crawl, over
+the redirect sources only, and materializes that closure; each
+superstep then attaches it to the drained batch with one
+``crawl.hit_miss_join`` (the batch broadcast, the closure streamed).
+The whole-store form (``final_destinations`` — redirect-aware url
+canonicalization feeding ``webtext.url_dedup``) walks every store url.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 import pandas as pd
 
@@ -73,7 +70,6 @@ def resolve_redirects(
     edges: DataFrame,
     url_col: str = "url",
     max_hops: int = 5,
-    broadcast_urls: bool = True,
 ) -> DataFrame:
     """Resolve each url's redirect chain against the edge table.
 
@@ -85,19 +81,10 @@ def resolve_redirects(
     ``final_url`` is then the last hop reached (diagnostic, not
     fetchable content).
 
-    ``broadcast_urls=True`` is the per-superstep form: every round
-    broadcasts the still-redirecting subset and streams the edge table
-    (never shuffled). Set ``False`` for corpus-scale inputs
-    (:func:`final_destinations`) — plain hash joins, mover set bounded
-    by the redirect-page count after the first round.
+    ``edges`` is probed once per hop: pass a materialized table when
+    deriving it is costly (the store scan + urljoin kernel of
+    :func:`redirect_edges`).
     """
-    # broadcast only in the per-superstep form: there the url set (and
-    # therefore every mover/settled subset derived from it) is
-    # batch-bounded. In the whole-store form the hop-1 mover set is
-    # the FULL redirect-page population — plain hash joins only.
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_urls else df
-
     cur = (
         urls.select(F.col(url_col).alias("url"))
         .distinct()
@@ -108,97 +95,39 @@ def resolve_redirects(
         )
     )
     e = edges.select(F.col("src").alias("_rs"), F.col("dst").alias("_rd"))
-    if not broadcast_urls:
-        # ---- whole-store form (r6 rewrite, guide §2.4 "remove
-        # shuffles outright") ----------------------------------------
-        # The previous shape kept an explicit settled/mover split: per
-        # hop one INNER join (movers) + one ANTI join (settled) + a
-        # final (max_hops+1)-way union — ~2·max_hops joins, each union
-        # branch re-planning the whole mover chain AND re-running the
-        # edge derivation (store scan + urljoin Arrow kernel).
-        #
-        # A row that settles is simply a LEFT-join MISS, and a settled
-        # row's final_url has no outgoing edge BY DEFINITION, so
-        # re-probing it in later hops is a guaranteed miss that changes
-        # nothing. The chain therefore collapses to max_hops LEFT
-        # joins over ONE linear plan — no anti-joins, no union — plus
-        # one final LEFT probe for redirect_ok (ok ⟺ the final url has
-        # no outgoing edge, the same NOT EXISTS property as before).
-        # Output rows are identical: a row that stops moving at hop k
-        # keeps (final_url, n_hops=k) through every later hop.
-        #
-        # The edge table is materialized ONCE (it is probed in every
-        # hop; a small fraction of the store by construction), so the
-        # urljoin kernel runs one pass instead of max_hops+1.
-        e = e.localCheckpoint(eager=True)
-        moved = F.col("_rd").isNotNull()
-        for _ in range(max_hops):
-            cur = (
-                cur.join(e, F.col("final_url") == F.col("_rs"), "left")
-                .select(
-                    "url",
-                    F.coalesce(F.col("_rd"), F.col("final_url"))
-                    .alias("final_url"),
-                    (F.col("n_hops") + moved.cast("int")).alias("n_hops"),
-                )
-            )
-        # the probe side is the DISTINCT src set: a failed chain whose
-        # final url has several outgoing edges (duplicate-src rows,
-        # e.g. two store snapshots of one redirect page) still yields
-        # one row per input url
-        return (
-            cur.join(e.select("_rs").distinct(),
-                     F.col("final_url") == F.col("_rs"), "left")
-            .select(
-                "url", "final_url", "n_hops",
-                F.col("_rs").isNull().alias("redirect_ok"),
-            )
-        )
-    settled_parts = []
+    # A row that settles is simply a LEFT-join MISS, and a settled
+    # row's final_url has no outgoing edge BY DEFINITION, so re-probing
+    # it in later hops is a guaranteed miss that changes nothing. The
+    # walk is therefore max_hops LEFT joins over ONE linear plan — no
+    # anti-joins, no union — plus one final LEFT probe for redirect_ok.
+    # A row that stops moving at hop k keeps (final_url, n_hops=k)
+    # through every later hop.
+    moved = F.col("_rd").isNotNull()
     for _ in range(max_hops):
-        movers = (
-            _bc(cur).join(e, F.col("final_url") == F.col("_rs"), "inner")
+        cur = (
+            cur.join(e, F.col("final_url") == F.col("_rs"), "left")
             .select(
                 "url",
-                F.col("_rd").alias("final_url"),
-                (F.col("n_hops") + 1).alias("n_hops"),
+                F.coalesce(F.col("_rd"), F.col("final_url"))
+                .alias("final_url"),
+                (F.col("n_hops") + moved.cast("int")).alias("n_hops"),
             )
         )
-        mover_keys = movers.select(F.col("url").alias("_mk"))
-        settled_parts.append(
-            cur.join(
-                _bc(mover_keys),
-                F.col("url") == F.col("_mk"),
-                "left_anti",
-            )
-        )
-        cur = movers
-    # final settlement check: rows that used exactly max_hops hops and
-    # LANDED on a non-redirect page are ok (requests allows exactly
-    # max_redirects hops); only rows still pointing at another
-    # redirect fail. So redirect_ok ⟺ the final url has no outgoing
-    # edge — the exact property a SQL NOT EXISTS mirror checks.
-    still_moving = _bc(cur).join(
-        e, F.col("final_url") == F.col("_rs"), "inner"
-    ).select(F.col("url").alias("_mk"))
-    settled_parts.append(
-        cur.join(
-            _bc(still_moving), F.col("url") == F.col("_mk"),
-            "left_anti",
+    # rows that used exactly max_hops hops and LANDED on a non-redirect
+    # page are ok (requests allows exactly max_redirects hops): ok ⟺
+    # the final url has no outgoing edge — the NOT EXISTS property a
+    # SQL mirror checks. The probe side is the DISTINCT src set: a
+    # failed chain whose final url has several outgoing edges
+    # (duplicate-src rows, e.g. two store snapshots of one redirect
+    # page) still yields one row per input url.
+    return (
+        cur.join(e.select("_rs").distinct(),
+                 F.col("final_url") == F.col("_rs"), "left")
+        .select(
+            "url", "final_url", "n_hops",
+            F.col("_rs").isNull().alias("redirect_ok"),
         )
     )
-    out = None
-    for part in settled_parts:
-        out = part if out is None else out.unionByName(part)
-    out = out.withColumn("redirect_ok", F.lit(True))
-    # whatever still points at a redirect page after max_hops rounds:
-    # loop or over-long chain
-    failed = cur.join(
-        _bc(still_moving.withColumnRenamed("_mk", "url")),
-        "url",
-        "left_semi",
-    )
-    return out.unionByName(failed.withColumn("redirect_ok", F.lit(False)))
 
 
 def final_destinations(
@@ -212,9 +141,11 @@ def final_destinations(
     compose with ``webtext.url_dedup`` by mapping urls to their final
     destination first, so a page reachable via 301 aliases dedups to
     one identity)."""
+    # the edge table is probed in every hop: materialize it once, so
+    # the urljoin kernel runs one pass instead of max_hops+1
+    edges = redirect_edges(
+        pages, url_col=url_col, target_col=target_col
+    ).localCheckpoint(eager=True)
     return resolve_redirects(
-        pages.select(F.col(url_col).alias("url")),
-        redirect_edges(pages, url_col=url_col, target_col=target_col),
-        max_hops=max_hops,
-        broadcast_urls=False,
+        pages.select(F.col(url_col).alias("url")), edges, max_hops=max_hops
     )
