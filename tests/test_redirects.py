@@ -50,6 +50,46 @@ def redirect_site(spark):
     return fixtures.pages_rows_to_spark(spark, rows)
 
 
+@pytest.fixture(scope="module")
+def crawl(spark, redirect_site):
+    """``crawl(plain=False, seen_filter=None) -> (result, jobs)``: one
+    client crawl of the redirect store (``plain``: the same store
+    without ``redirect_to``) from the seed, ``max_urls=10``, run once
+    per option set and shared by this module's tests. A ``seen_filter``
+    crawl also drains through a robots table. ``jobs`` is the mean
+    number of Spark jobs per superstep of the run, counted through the
+    public status API (the run's jobs carry their own job group)."""
+    robots = spark.createDataFrame(
+        [("www.rsite.example.com", [], 0.01)],
+        "host string, disallow array<string>, crawl_delay double",
+    )
+    sc = spark.sparkContext
+    runs = {}
+
+    def run(plain=False, seen_filter=None):
+        key = (plain, seen_filter)
+        if key not in runs:
+            store = redirect_site.drop("redirect_to") if plain \
+                else redirect_site
+            kw = dict(seen_filter=seen_filter, robots=robots) \
+                if seen_filter else {}
+            group = f"redirect-crawl-{plain}-{seen_filter}"
+            sc.setJobGroup(group, group)
+            try:
+                res = CrawlEngine(spark, store, mode="client", **kw).run(
+                    [CrawlJob("j", f"{H}/seed.html", max_urls=10)])
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            runs[key] = (res, n_jobs / res.supersteps)
+        return runs[key]
+
+    yield run
+    for res, _ in runs.values():
+        res.unpersist()
+
+
 def test_resolve_redirects_chains_and_loops(spark, redirect_site):
     edges = rd.redirect_edges(redirect_site)
     assert sorted(tuple(r) for r in edges.collect()) == [
@@ -69,10 +109,8 @@ def test_resolve_redirects_chains_and_loops(spark, redirect_site):
     assert hops == 5 and not ok
 
 
-def test_engine_follows_redirects(spark, redirect_site):
-    res = CrawlEngine(spark, redirect_site, mode="client").run(
-        [CrawlJob("j", f"{H}/seed.html", max_urls=10)]
-    )
+def test_engine_follows_redirects(crawl):
+    res, _ = crawl()
     rows = {r.url: r for r in res.crawled.collect()}
     # R records the FINAL page's content under the requested url
     assert rows[f"{H}/redir/r.html"].success
@@ -92,44 +130,30 @@ def test_engine_follows_redirects(spark, redirect_site):
              for r in res.redirects.collect()}
     assert redir[f"{H}/redir/r.html"] == (f"{H}/pages/p.html", 1, True)
     assert not redir[f"{H}/loop/1.html"][2]
-    res.unpersist()
 
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_engine_redirects_with_bloom_and_robots(spark, redirect_site,
-                                                 seen_filter):
+def test_engine_redirects_with_bloom_and_robots(crawl, seen_filter):
     """The production path (seen prefilter + politeness drain) keeps
     the same redirect semantics: finals dedup even though the filter
     has not absorbed them when this step's candidates probe it."""
-    robots = spark.createDataFrame(
-        [("www.rsite.example.com", [], 0.01)],
-        "host string, disallow array<string>, crawl_delay double",
-    )
-    res = CrawlEngine(
-        spark, redirect_site, mode="client", seen_filter=seen_filter,
-        robots=robots,
-    ).run([CrawlJob("j", f"{H}/seed.html", max_urls=10)])
+    res, _ = crawl(seen_filter=seen_filter)
     rows = {r.url: r for r in res.crawled.collect()}
     assert rows[f"{H}/redir/r.html"].title == "PageP"
     assert f"{H}/pages/p.html" not in rows
     assert res.seen.filter(
         F.col("url") == f"{H}/pages/p.html"
     ).count() == 1
-    res.unpersist()
 
 
-def test_store_without_redirect_column_unchanged(spark, redirect_site):
+def test_store_without_redirect_column_unchanged(crawl):
     """Dropping the column = the old store shape: redirect pages are
     ordinary rows (their stub body crawls), result.redirects is None."""
-    plain = redirect_site.drop("redirect_to")
-    res = CrawlEngine(spark, plain, mode="client").run(
-        [CrawlJob("j", f"{H}/seed.html", max_urls=10)]
-    )
+    res, _ = crawl(plain=True)
     assert res.redirects is None
     rows = {r.url: r for r in res.crawled.collect()}
     assert rows[f"{H}/redir/r.html"].title == "Moved"
     assert f"{H}/pages/p.html" in rows
-    res.unpersist()
 
 
 def test_seeder_mode_follows_redirects(spark, redirect_site):
@@ -143,39 +167,14 @@ def test_seeder_mode_follows_redirects(spark, redirect_site):
     res.unpersist()
 
 
-def _jobs_per_superstep(spark, store, group, **kw):
-    """Mean Spark jobs per superstep of one client crawl of ``store``,
-    counted through the public status API (the run's jobs carry their
-    own job group)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        res = CrawlEngine(spark, store, mode="client", **kw).run(
-            [CrawlJob("j", f"{H}/seed.html", max_urls=10)])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    steps = res.supersteps
-    res.unpersist()
-    return n_jobs / steps
-
-
-def test_redirect_superstep_job_overhead_bounded(spark, redirect_site):
+def test_redirect_superstep_job_overhead_bounded(crawl):
     """Following redirects costs a small constant number of Spark jobs
     per superstep over the same crawl of the plain store: the chains
     resolve once per crawl, not once per superstep."""
-    robots = spark.createDataFrame(
-        [("www.rsite.example.com", [], 0.01)],
-        "host string, disallow array<string>, crawl_delay double",
-    )
-    plain = redirect_site.drop("redirect_to")
-    for tag, kw in (("default", {}),
-                    ("bloom_robots", dict(use_bloom=True, robots=robots))):
-        redir = _jobs_per_superstep(spark, redirect_site,
-                                    f"redir-{tag}", **kw)
-        base = _jobs_per_superstep(spark, plain, f"plain-{tag}", **kw)
-        assert redir <= base + 20, (tag, redir, base)
+    for seen_filter in (None, "bloom"):
+        _, redir = crawl(seen_filter=seen_filter)
+        _, base = crawl(plain=True, seen_filter=seen_filter)
+        assert redir <= base + 20, (seen_filter, redir, base)
 
 
 def _redirect_crawl_rows(res):
@@ -185,30 +184,28 @@ def _redirect_crawl_rows(res):
 
 
 def test_redirect_crawl_resumes_and_releases_closure(spark, redirect_site,
-                                                     tmp_path):
+                                                     crawl, tmp_path):
     """A redirect crawl interrupted after one superstep and resumed by
     a fresh engine (which rebuilds the redirect closure) equals one
     uninterrupted run: ordered crawled rows and the seen set. After
     unpersist(), executor storage is back to its level before the
-    run: neither the closure nor the edge table it was walked over
-    stays pinned."""
+    two runs: neither the closure nor the edge table it was walked
+    over stays pinned."""
     from test_scale_path import _cached_rdd_ids, _wait_until
 
     jobs = [CrawlJob("j", f"{H}/seed.html", max_urls=10)]
+    want = _redirect_crawl_rows(crawl()[0])
     before = _cached_rdd_ids(spark)
-    full = CrawlEngine(spark, redirect_site, mode="client").run(jobs)
-    want = _redirect_crawl_rows(full)
-    full.unpersist(blocking=True)
-    assert _wait_until(lambda: not (_cached_rdd_ids(spark) - before)), (
-        _cached_rdd_ids(spark) - before
-    )
     ckpt = str(tmp_path / "ckpt")
     CrawlEngine(spark, redirect_site, mode="client", checkpoint_dir=ckpt,
-                max_supersteps=1).run(jobs).unpersist()
+                max_supersteps=1).run(jobs).unpersist(blocking=True)
     resumed = CrawlEngine(spark, redirect_site, mode="client",
                           checkpoint_dir=ckpt).run(jobs, resume=True)
     assert _redirect_crawl_rows(resumed) == want
-    resumed.unpersist()
+    resumed.unpersist(blocking=True)
+    assert _wait_until(lambda: not (_cached_rdd_ids(spark) - before)), (
+        _cached_rdd_ids(spark) - before
+    )
 
 
 def test_failed_chain_on_duplicate_src_edges_one_row(spark):

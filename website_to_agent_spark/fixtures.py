@@ -316,6 +316,8 @@ def pages_rows_to_spark(spark, rows: List[dict]):
     switches ``CrawlEngine`` into redirect-following mode."""
     from pyspark.sql import types as T
 
+    from website_to_agent_spark.session import local_frame
+
     fields = [
         T.StructField("url", T.StringType(), False),
         T.StructField("warc_ts", T.TimestampType(), True),
@@ -335,7 +337,7 @@ def pages_rows_to_spark(spark, rows: List[dict]):
         + ((r.get("redirect_to"),) if has_redirects else ())
         for r in rows
     ]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def redirect_row(url: str, target: str) -> dict:

@@ -69,8 +69,11 @@ def hash_embed(text, dim: int = 64, hash_fn: str = "xxhash64") -> F.Column:
     L2-normalized counts of hashed word tokens, as ``array<double>`` —
     lets every ANN/near-dup operator in this module run directly over
     a text corpus with no model in the loop. Pure column math, zero
-    shuffle (O(dim × tokens) hash evaluations per doc — fine at the
-    featurizer dims this is for).
+    shuffle: each token is hashed once and counted into its bucket,
+    O(dim × tokens) compares per doc — fine at the featurizer dims this
+    is for. Lambda bodies never reference a computed outer column
+    (Spark re-evaluates such a reference per element), so the counts
+    and their norm are each evaluated once.
 
     ``hash_fn="xxhash64"`` is the fast JVM path; ``hash_fn="md5"``
     buckets by the first 15 md5 hex chars, reproducible in DuckDB, so
@@ -87,18 +90,29 @@ def hash_embed(text, dim: int = 64, hash_fn: str = "xxhash64") -> F.Column:
         )
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.size(F.filter(toks, lambda t: bucket(t) == i)).cast(
-            "double"
+    counts = F.aggregate(
+        F.transform(toks, bucket),
+        F.array_repeat(F.lit(0.0), dim),
+        lambda acc, b: F.transform(
+            acc, lambda x, i: F.when(i == b, x + 1.0).otherwise(x)
         ),
     )
-    nrm = F.sqrt(
-        F.aggregate(counts, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return F.transform(
-        counts, lambda x: x / F.greatest(nrm, F.lit(1e-12))
-    )
+    # (sum of squares, counts) in one pass; the finish lambda sees
+    # both as lambda variables. NULL text → dim NULLs.
+    nulls = F.array_repeat(F.lit(None).cast("double"), dim)
+    return F.when(F.lower(text).isNull(), nulls).otherwise(F.aggregate(
+        counts,
+        F.struct(F.lit(0.0).alias("ss"),
+                 F.array().cast("array<double>").alias("v")),
+        lambda acc, x: F.struct(
+            (acc["ss"] + x * x).alias("ss"),
+            F.concat(acc["v"], F.array(x)).alias("v"),
+        ),
+        lambda acc: F.transform(
+            acc["v"],
+            lambda x: x / F.greatest(F.sqrt(acc["ss"]), F.lit(1e-12)),
+        ),
+    ))
 
 
 # ------------------------------------------------------------------ LSH

@@ -78,6 +78,7 @@ from website_to_agent_spark.operators.redirects import (
     redirect_edges,
     resolve_redirects,
 )
+from website_to_agent_spark.session import local_frame
 from website_to_agent_spark.sources.catalog import SnapshotCatalog
 from website_to_agent_spark.sources.httpfetch import http_fetch
 
@@ -244,7 +245,7 @@ def _union_all(spark: SparkSession, schema_, parts: list) -> DataFrame:
     """``parts`` stacked by column name onto an empty ``schema_`` frame
     (so a run that produced no parts still returns a typed table)."""
     return reduce(DataFrame.unionByName, parts,
-                  spark.createDataFrame([], schema_))
+                  local_frame(spark, [], schema_))
 
 
 @dataclass
@@ -492,11 +493,11 @@ class CrawlEngine:
     def _init_state(self, jobs: list[CrawlJob]):
         """The step-0 frontier and seen set: each job's seed url."""
         seeds = [(j.job_id, j.seed_url, 0, 0) for j in jobs]
-        frontier = self.spark.createDataFrame(
-            seeds, "job_id string, url string, depth int, ord long"
+        frontier = local_frame(
+            self.spark, seeds, "job_id string, url string, depth int, ord long"
         )
-        seen = self.spark.createDataFrame(
-            seeds, "job_id string, url string, ord long, depth int"
+        seen = local_frame(
+            self.spark, seeds, "job_id string, url string, ord long, depth int"
         )
         return frontier, seen
 
@@ -519,9 +520,10 @@ class CrawlEngine:
         """Materialize the driver-side job-state dict (one short row
         per job — bounded by the job count, the same bound the old
         per-step job_state checkpoint carried) as a DataFrame for the
-        frontier/batch joins. createDataFrame of a job-count-bounded
-        list costs no Spark job."""
-        return self.spark.createDataFrame(
+        frontier/batch joins. A local frame of a job-count-bounded
+        list costs no Spark job and is broadcast into the joins."""
+        return local_frame(
+            self.spark,
             [(k, int(v[0]), int(v[1]), int(v[2]), int(v[3]), v[4])
              for k, v in js.items()],
             schema.JOB_STATE,
@@ -557,10 +559,10 @@ class CrawlEngine:
         # stats the loop collects anyway. This replaces two Spark jobs
         # per superstep (the frontier⋈state isEmpty probe and the
         # job_state localCheckpoint) with one bounded collect; the
-        # joins that need state columns get a createDataFrame snapshot
-        # (broadcast-sized by construction). At 10^6-job scale the
-        # stats collect stays bounded by the ACTIVE job count per
-        # superstep — the same bound the old checkpointed table had.
+        # joins that need state columns broadcast a local-frame
+        # snapshot (broadcast-sized by construction). At 10^6-job
+        # scale the stats collect stays bounded by the ACTIVE job count
+        # per superstep — the same bound the old checkpointed table had.
         js: dict = {}
         # per-job frontier row counts when the driver knows them
         # exactly (fresh start: the seeds; steps without drain
@@ -727,9 +729,7 @@ class CrawlEngine:
                 break
             job_state = self._job_state_df(js)
             active_state = job_state.filter(F.col("budget_used") < F.col("max_urls"))
-            live = (
-                frontier.join(active_state, "job_id", "inner")
-            )
+            live = frontier.join(F.broadcast(active_state), "job_id", "inner")
             _t_empty = time.time()
             _j_empty = _jid()
 
@@ -958,7 +958,8 @@ class CrawlEngine:
             # budget cap at enqueue time (seeder: discovered budget,
             # `url_seeder.py:82-83`); client enqueues uncapped.
             cand = cand.join(
-                job_state.select("job_id", "budget_used", "next_ord", "max_urls"),
+                F.broadcast(job_state.select(
+                    "job_id", "budget_used", "next_ord", "max_urls")),
                 "job_id",
             )
             if self.mode == "seeder":
@@ -1089,7 +1090,8 @@ class CrawlEngine:
             # same values and schema as the old per_job projection,
             # zero extra jobs and no lineage back into the bundle
             _secs = time.time() - t0
-            step_metrics = spark.createDataFrame(
+            step_metrics = local_frame(
+                spark,
                 [
                     (step, r["job_id"], None, r["n_fetched"],
                      r["n_parsed"], r["n_failed"], r["n_links"], None,
