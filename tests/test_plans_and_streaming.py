@@ -61,8 +61,9 @@ def test_frontier_pages_fetch_join_is_broadcast(spark, pages_df, site, user):
         # a stored snapshot table, as a re-crawl reads it
         snap = CrawlEngine._snapshot_columns(
             recrawl.crawl_snapshots(crawled, pages_df).localCheckpoint())
-        fetched = CrawlEngine._attach_snapshots(
-            CrawlEngine._fetch(frontier, pages), snap)
+        # as the engine orders it: attach to the drained batch, then fetch
+        fetched = CrawlEngine._fetch(
+            CrawlEngine._attach_snapshots(frontier, snap), pages)
         hit_col = "_snap_digest"
     assert plans.has_broadcast_join(fetched)
     plan = plans.explain_str(fetched)

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from website_to_agent_spark import fixtures
+from website_to_agent_spark.operators import recrawl
 from website_to_agent_spark.operators import redirects as rd
 from website_to_agent_spark.operators.crawl import CrawlEngine, CrawlJob
 
@@ -52,13 +53,15 @@ def redirect_site(spark):
 
 @pytest.fixture(scope="module")
 def crawl(spark, redirect_site):
-    """``crawl(plain=False, seen_filter=None) -> (result, jobs)``: one
-    client crawl of the redirect store (``plain``: the same store
-    without ``redirect_to``) from the seed, ``max_urls=10``, run once
-    per option set and shared by this module's tests. A ``seen_filter``
-    crawl also drains through a robots table. ``jobs`` is the mean
-    number of Spark jobs per superstep of the run, counted through the
-    public status API (the run's jobs carry their own job group)."""
+    """``crawl(plain=False, seen_filter=None, revalidate=False) ->
+    (result, jobs)``: one client crawl of the redirect store
+    (``plain``: the same store without ``redirect_to``) from the seed,
+    ``max_urls=10``, run once per option set and shared by this
+    module's tests. A ``seen_filter`` crawl also drains through a
+    robots table; a ``revalidate`` crawl revalidates against the
+    snapshot of the default crawl. ``jobs`` is the mean number of Spark
+    jobs per superstep of the run, counted through the public status
+    API (the run's jobs carry their own job group)."""
     robots = spark.createDataFrame(
         [("www.rsite.example.com", [], 0.01)],
         "host string, disallow array<string>, crawl_delay double",
@@ -66,14 +69,17 @@ def crawl(spark, redirect_site):
     sc = spark.sparkContext
     runs = {}
 
-    def run(plain=False, seen_filter=None):
-        key = (plain, seen_filter)
+    def run(plain=False, seen_filter=None, revalidate=False):
+        key = (plain, seen_filter, revalidate)
         if key not in runs:
             store = redirect_site.drop("redirect_to") if plain \
                 else redirect_site
             kw = dict(seen_filter=seen_filter, robots=robots) \
                 if seen_filter else {}
-            group = f"redirect-crawl-{plain}-{seen_filter}"
+            if revalidate:
+                kw["revalidate_with"] = recrawl.crawl_snapshots(
+                    run()[0].crawled, redirect_site).localCheckpoint()
+            group = f"redirect-crawl-{plain}-{seen_filter}-{revalidate}"
             sc.setJobGroup(group, group)
             try:
                 res = CrawlEngine(spark, store, mode="client", **kw).run(
@@ -175,6 +181,17 @@ def test_redirect_superstep_job_overhead_bounded(crawl):
         _, redir = crawl(seen_filter=seen_filter)
         _, base = crawl(plain=True, seen_filter=seen_filter)
         assert redir <= base + 20, (seen_filter, redir, base)
+
+
+def test_revalidation_superstep_job_overhead_bounded(crawl):
+    """Revalidation costs a small constant number of Spark jobs per
+    superstep: the snapshot attaches to the drained batch once, before
+    the store fetch. A bloom + robots redirect crawl with it also
+    crawls the same rows and seen set as without it."""
+    reval_res, reval = crawl(seen_filter="bloom", revalidate=True)
+    base_res, base = crawl(seen_filter="bloom")
+    assert reval <= base + 10, (reval, base)
+    assert _redirect_crawl_rows(reval_res) == _redirect_crawl_rows(base_res)
 
 
 def _redirect_crawl_rows(res):

@@ -5,6 +5,7 @@ a plain crawl of the new store while skipping the Arrow parse kernel
 for every digest-unchanged page (links replayed from the snapshot's
 link-DB column)."""
 
+import os
 from datetime import datetime
 
 import pytest
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from website_to_agent_spark import fixtures
 from website_to_agent_spark.operators import recrawl
 from website_to_agent_spark.operators.crawl import CrawlEngine, CrawlJob
+from website_to_agent_spark.sources.catalog import SnapshotCatalog
 
 _TS = datetime(2025, 1, 1)
 
@@ -101,15 +103,16 @@ def test_no_snapshot_means_no_table(spark, two_version_store):
     res.unpersist()
 
 
-def test_redirects_revalidation_and_meta_robots_compose(spark):
-    """All three s6 engine features in ONE production-shaped run
-    (bloom + politeness + redirects + 304 reuse + robots meta):
-    the re-crawl is bit-identical to round 1, the redirect final
-    dedups, the nofollow anchor never crawls, noindex is flagged,
-    and every digest-unchanged page reuses (the redirect row itself
-    conservatively re-fetches — stub-digest mismatch, documented)."""
-    from website_to_agent_spark.operators.crawl import CrawlEngine, CrawlJob
+@pytest.fixture(scope="module")
+def compose(spark, tmp_path_factory):
+    """A store exercising all three s6 engine features — a seed
+    linking a 301 alias (r.html → p.html → q.html), a rel=nofollow
+    anchor (nf.html) and a noindex page (b.html) — crawled twice in
+    production shape (bloom + politeness + robots meta): r1 plain, r2
+    with a catalog and 304 reuse against r1's snapshot.
 
+    Returns ``(pages, kw, jobs, r1, r2)``; ``kw`` is r2's engine
+    options without its ``checkpoint_dir``."""
     H = "https://www.allf.example.com"
 
     def page(url, body, meta=""):
@@ -137,11 +140,25 @@ def test_redirects_revalidation_and_meta_robots_compose(spark):
     )
     kw = dict(mode="client", honor_meta_robots=True, robots=robots,
               use_bloom=True)
-    r1 = CrawlEngine(spark, pages, **kw).run(
-        [CrawlJob("j", f"{H}/seed.html", max_urls=9)])
+    jobs = [CrawlJob("j", f"{H}/seed.html", max_urls=9)]
+    r1 = CrawlEngine(spark, pages, **kw).run(jobs)
     snap = recrawl.crawl_snapshots(r1.crawled, pages).localCheckpoint()
-    r2 = CrawlEngine(spark, pages, revalidate_with=snap, **kw).run(
-        [CrawlJob("j", f"{H}/seed.html", max_urls=9)])
+    kw["revalidate_with"] = snap
+    ckpt = str(tmp_path_factory.mktemp("compose") / "ckpt")
+    r2 = CrawlEngine(spark, pages, checkpoint_dir=ckpt, **kw).run(jobs)
+    yield pages, kw, jobs, r1, r2
+    r1.unpersist()
+    r2.unpersist()
+
+
+def test_redirects_revalidation_and_meta_robots_compose(compose):
+    """All three s6 engine features in ONE production-shaped run
+    (bloom + politeness + redirects + 304 reuse + robots meta):
+    the re-crawl is bit-identical to round 1, the redirect final
+    dedups, the nofollow anchor never crawls, noindex is flagged,
+    and every digest-unchanged page reuses (the redirect row itself
+    conservatively re-fetches — stub-digest mismatch, documented)."""
+    _, _, _, r1, r2 = compose
     o1 = [(r.fetch_ord, r.url, r.success, r.text)
           for r in r1.crawled.orderBy("fetch_ord").collect()]
     o2 = [(r.fetch_ord, r.url, r.success, r.text)
@@ -156,8 +173,95 @@ def test_redirects_revalidation_and_meta_robots_compose(spark):
     assert sorted(r.url.rsplit("/", 1)[1]
                   for r in r2.revalidated.collect()) \
         == ["b.html", "q.html", "seed.html"]
-    r1.unpersist()
-    r2.unpersist()
+
+
+def _compose_outputs(res):
+    """Everything a resume must reproduce: the ordered crawled rows,
+    the seen set and the three per-row side tables."""
+    return (
+        [(r.fetch_ord, r.url, r.success, r.text)
+         for r in res.crawled.orderBy("fetch_ord").collect()],
+        sorted(r.url for r in res.seen.collect()),
+        *(sorted(tuple(r) for r in t.collect())
+          for t in (res.redirects, res.revalidated, res.noindexed)),
+    )
+
+
+class _Killed(Exception):
+    """Raised where a killed process would have stopped."""
+
+
+class _WriteKills:
+    """A commit table whose write dies before it starts."""
+
+    @property
+    def write(self):
+        raise _Killed("table write")
+
+
+def _fail_commit(m, point: str, superstep: int) -> None:
+    """Make ``SnapshotCatalog.commit`` of ``superstep`` fail at
+    ``point``: before any table write, after the first two tables, or
+    at the manifest rename. Each leaves the files a kill there would."""
+    commit = SnapshotCatalog.commit
+
+    def failing(self, step, tables, **kw):
+        if step == superstep:
+            if point == "before_tables":
+                raise _Killed(point)
+            if point == "after_two_tables":
+                tables = {name: df if i < 2 else _WriteKills()
+                          for i, (name, df) in enumerate(tables.items())}
+            if point == "at_manifest":
+                replace = os.replace
+
+                def dying_replace(src, dst):
+                    if os.path.basename(dst) == "_MANIFEST.json":
+                        raise _Killed(point)
+                    return replace(src, dst)
+
+                m.setattr(os, "replace", dying_replace)
+        return commit(self, step, tables, **kw)
+
+    m.setattr(SnapshotCatalog, "commit", failing)
+
+
+@pytest.mark.parametrize(
+    "kill", [None, "before_tables", "after_two_tables", "at_manifest"])
+def test_compose_crawl_resumes_to_the_same_result(spark, compose, tmp_path,
+                                                  monkeypatch, kill):
+    """r2's crawl, stopped and resumed from its catalog by a fresh
+    engine, equals the uninterrupted r2 — crawled rows, seen set and
+    the redirects / revalidated / noindexed tables. It stops either
+    after two supersteps (``kill`` None) or by an in-process failure
+    at one point of superstep 1's commit."""
+    pages, kw, jobs, _, r2 = compose
+    ckpt = str(tmp_path / "ckpt")
+    if kill is None:
+        CrawlEngine(spark, pages, checkpoint_dir=ckpt, max_supersteps=2,
+                    **kw).run(jobs).unpersist()
+    else:
+        with monkeypatch.context() as m:
+            _fail_commit(m, kill, superstep=1)
+            with pytest.raises(_Killed):
+                CrawlEngine(spark, pages, checkpoint_dir=ckpt,
+                            **kw).run(jobs)
+        assert SnapshotCatalog(ckpt).latest_superstep() == 0
+        step1 = os.path.join(ckpt, "superstep=1")
+        left = set(os.listdir(step1)) if os.path.isdir(step1) else set()
+        tables = {"frontier.parquet", "job_state.parquet"}
+        assert left == {
+            "before_tables": set(),
+            "after_two_tables": tables,
+            "at_manifest": tables | {"crawled_delta.parquet",
+                                     "metrics_delta.parquet",
+                                     "seen_delta.parquet",
+                                     "_MANIFEST.json.tmp"},
+        }[kill]
+    resumed = CrawlEngine(spark, pages, checkpoint_dir=ckpt, **kw).run(
+        jobs, resume=True)
+    assert _compose_outputs(resumed) == _compose_outputs(r2)
+    resumed.unpersist()
 
 
 def test_multi_job_snapshot_dedups_by_url(spark, two_version_store):

@@ -76,7 +76,8 @@ def main() -> None:
         "superstep. Misses come from a second tiny broadcast anti-join.",
     )
 
-    # 2b. revalidation-snapshot attach — the same hit/miss join
+    # 2b. revalidation-snapshot attach on the drained batch, then the
+    # fetch — the same hit/miss join twice
     from website_to_agent_spark.operators import recrawl
 
     crawled = spark.createDataFrame(
@@ -86,17 +87,23 @@ def main() -> None:
         " content string",
     )
     add(
-        "Fetched batch ⋈ revalidation snapshot attach",
-        CrawlEngine._attach_snapshots(
-            fetched,
-            CrawlEngine._snapshot_columns(
-                recrawl.crawl_snapshots(crawled, pages).localCheckpoint()
+        "Drained batch ⋈ revalidation snapshot attach + fetch",
+        CrawlEngine._fetch(
+            CrawlEngine._attach_snapshots(
+                frontier,
+                CrawlEngine._snapshot_columns(
+                    recrawl.crawl_snapshots(crawled, pages).localCheckpoint()
+                ),
             ),
+            pages.select(F.col("url").alias("p_url"), "html"),
         ),
-        "`crawl.hit_miss_join` again: the fetched batch is broadcast "
-        "against the corpus-scale snapshot table, which streams; the "
-        "batch rows without a snapshot come from a broadcast anti-join "
-        "against the hit keys, with typed-null `_snap_*` columns.",
+        "`crawl.hit_miss_join` twice, in the engine's order: the drained "
+        "batch is broadcast against the corpus-scale snapshot table, "
+        "which streams (rows without a snapshot come from a broadcast "
+        "anti-join against the hit keys, with typed-null `_snap_*` "
+        "columns); the annotated batch is then broadcast against the "
+        "page store for the fetch. The snapshot payload rides the "
+        "batch; the fetched html is never broadcast.",
     )
 
     # 2c. candidate seen anti-join behind each URL-seen prefilter, as

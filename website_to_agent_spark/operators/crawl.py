@@ -36,14 +36,18 @@ Scale notes (100 TB / 10^10-frontier design):
 - Everything is keyed by ``job_id`` — one engine run drives millions of
   independent crawl jobs; all windows are per-job, so parallelism is
   across jobs and pages, never a global sort.
-- The frontier⋈pages join (and the redirect-closure and
-  revalidation-snapshot attaches) is ``hit_miss_join``: the (small)
-  drained frontier batch is broadcast against the huge pages table,
-  which streams and never shuffles; on a cluster the pages table is
-  bucketed by url hash so the probe is partition-pruned.
+- The frontier⋈pages join is ``hit_miss_join``: the (small) drained
+  frontier batch is broadcast against the huge pages table, which
+  streams and never shuffles; on a cluster the pages table is bucketed
+  by url hash so the probe is partition-pruned. The redirect-closure
+  and revalidation-snapshot attaches are the same join, applied once
+  to the drained batch before the fetch.
 - Per-superstep state is checkpointed through ``SnapshotCatalog``
   (atomic manifest commit) and re-read, truncating lineage — killed
-  jobs resume exactly (T5).
+  jobs resume exactly (T5). The crawled delta carries the per-row
+  redirect / reuse / noindex flags, so the ``redirects``,
+  ``revalidated`` and ``noindexed`` tables are filters of the
+  committed rows and resume with them.
 - Hot-host skew: drain quotas per registrable domain (politeness, T2)
   plus AQE skew-join; candidates are deduped map-side by
   (job, url) before the anti-join shuffle.
@@ -60,6 +64,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from website_to_agent_spark import schema
 from website_to_agent_spark.functions import urlfns
@@ -131,17 +136,16 @@ _SNAP_FIELDS = ("digest",) + _PAYLOAD_FIELDS
 # store-fetch flags: True on a hit, False on a miss
 _FETCH_FLAGS = ("success", "html_ok")
 _FRONTIER_COLS = ("job_id", "url", "depth", "ord")
-_URL_STEP_DDL = "job_id string, url string, superstep int"
-# the per-superstep side tables (CrawlResultTables fields of the same
-# name), each None unless its feature is on
-_SIDE_TABLE_DDL = {
-    "trap_drops": "job_id string, host string, template string,"
-                  " dropped long, superstep int",
-    "redirects": "job_id string, url string, final_url string,"
-                 " n_hops int, redirect_ok boolean, superstep int",
-    "revalidated": _URL_STEP_DDL,
-    "noindexed": _URL_STEP_DDL,
-}
+# the per-row flags a crawled delta carries past the CRAWLED columns,
+# each only while its feature is on: the redirect chain (redirects
+# followed), reused (revalidate_with), robots_noindex
+# (honor_meta_robots). The redirects / revalidated / noindexed result
+# tables are filters of them.
+_FLAG_TYPES = {"final_url": T.StringType(), "n_hops": T.IntegerType(),
+               "redirect_ok": T.BooleanType(), "reused": T.BooleanType(),
+               "robots_noindex": T.BooleanType()}
+_TRAP_DROPS_DDL = ("job_id string, host string, template string,"
+                   " dropped long, superstep int")
 
 
 class _SeenFilter(NamedTuple):
@@ -258,7 +262,12 @@ class CrawlResultTables:
     # (job_id, host, template, dropped, superstep) when the engine ran
     # with trap_max_urls — every candidate the trap guard dropped,
     # template-granular (no-silent-caps). None when the guard was off.
+    # Guard state is in memory: after a catalog resume it covers only
+    # the resumed run's supersteps.
     trap_drops: Optional[DataFrame] = None
+    # redirects, revalidated and noindexed are filters of the crawled
+    # rows (their flag columns ride the crawled delta), so a catalog
+    # resume restores them with the crawled table.
     # (job_id, url, final_url, n_hops, redirect_ok, superstep) for
     # every fetched url whose redirect chain was followed (n_hops > 0)
     # or failed to resolve (redirect_ok=false: loop / over max hops).
@@ -276,7 +285,8 @@ class CrawlResultTables:
     # (job_id, url, cash, hist) — the final OPIC cash/history state
     # (url '' is the per-job dangling sink). Feed to opic_importance
     # for the normalized estimate. None unless the engine ran with
-    # opic=True.
+    # opic=True. In memory like the trap guard: after a catalog resume
+    # it covers only the resumed run.
     opic: Optional[DataFrame] = None
     # every localCheckpoint the run still holds at return time; on a
     # catalog-backed run the result tables re-read from disk so this is
@@ -449,7 +459,7 @@ class CrawlEngine:
         # both be fetched by later enqueues.
         # CrawlResultTables.redirects records every followed/failed
         # chain (never silent). The chain columns every bundle row
-        # carries when redirects are followed:
+        # and crawled delta row carries when redirects are followed:
         self._redir_cols = (
             ["final_url", "n_hops", "redirect_ok"]
             if pages is not None and "redirect_to" in pages.columns
@@ -459,15 +469,17 @@ class CrawlEngine:
         # operators/recrawl.revalidate): a snapshot table from a prior
         # crawl of the same store — (url, digest, title, description,
         # keywords, text, markdown, content), built by
-        # recrawl.crawl_snapshots. During the fetch, a url whose
+        # recrawl.crawl_snapshots, attached to each drained batch
+        # before the fetch. A url whose
         # current html digest equals the snapshot digest REUSES the
         # stored extraction AND stored out-links verbatim (the Arrow
         # parse kernel — the dominant re-crawl cost — never runs for
         # it; byte-identical html ⟹ identical links, replayed from
         # the snapshot's link-DB column). Reused urls still consume
         # fetch budget (the request happened; only the body/processing
-        # is saved — exactly HTTP 304 semantics). Rows are recorded in
-        # CrawlResultTables.revalidated. Client mode only (the seeder
+        # is saved — exactly HTTP 304 semantics). The crawled delta
+        # carries a `reused` flag; CrawlResultTables.revalidated is its
+        # filter. Client mode only (the seeder
         # never extracts). The stored `content` is reused as-is, so
         # the snapshot must come from a run with the same
         # output_format.
@@ -641,17 +653,14 @@ class CrawlEngine:
             and self.mode == "client"
         ):
             snap = self._snapshot_columns(self.revalidate_with)
-        # the side tables this run keeps: name → its per-step parts
-        side_parts: dict = {
-            name: []
-            for name, on in (
-                ("trap_drops", self.trap_max_urls is not None),
-                ("redirects", redirect_closure is not None),
-                ("revalidated", snap is not None),
-                ("noindexed", self.honor_meta_robots),
-            )
-            if on
-        }
+        # the crawled delta: the CRAWLED columns plus this run's flags
+        flag_cols = list(self._redir_cols)
+        if snap is not None:
+            flag_cols.append("reused")
+        if self.honor_meta_robots:
+            flag_cols.append("robots_noindex")
+        delta_cols = [f.name for f in schema.CRAWLED.fields] + flag_cols
+        trap_parts: list[DataFrame] = []
         # the mode's superstep: its bundle builder, its link predicate
         # over (url, base_domain), and the per-job stat that spends
         # budget (client: successes; seeder: enqueues)
@@ -693,13 +702,6 @@ class CrawlEngine:
         # step's first consuming job instead of costing its own eager
         # job, so its parent can only be released AFTER that job ran
         pending_release: list[DataFrame] = []
-
-        def record(name: str, rows: DataFrame) -> None:
-            """Checkpoint one step's rows of side table ``name``; the
-            result table keeps the blocks."""
-            rows = rows.localCheckpoint(eager=True)
-            side_parts[name].append(rows)
-            retained.append(rows)
 
         _timing = os.environ.get("SPARK_GRAFT_STEP_TIMING") == "1"
 
@@ -754,11 +756,14 @@ class CrawlEngine:
             # (batch-bounded) rows once and the rest read cache.
             # Lazy per-step caches (this one and the seen-filter probe)
             # are dropped right after the frontier materializes.
-            # The redirect chain columns attach BEFORE the persist, so
-            # the fetch and snapshot joins read the cached rows.
+            # The redirect chain and snapshot columns attach BEFORE the
+            # persist, so the store fetch — the only join after it —
+            # reads the cached rows.
             step_caches: list = []
             if redirect_closure is not None:
                 batch = self._attach_redirects(batch, redirect_closure)
+            if snap is not None:
+                batch = self._attach_snapshots(batch, snap)
             if pages is not None and leftover is not None:
                 batch = batch.persist()
                 step_caches.append(batch)
@@ -768,8 +773,6 @@ class CrawlEngine:
                 fetched = self._fetch(batch, pages, pages_urls)
             else:
                 fetched = self._fetch_live(batch)
-            if snap is not None:
-                fetched = self._attach_snapshots(fetched, snap)
 
             # The step bundle (extraction output) is materialized ONCE —
             # everything downstream (crawled delta, candidates, stats,
@@ -777,9 +780,7 @@ class CrawlEngine:
             # kernel runs exactly once per page per superstep instead of
             # once per derived state table.
             bundle = step_bundle(fetched, step)
-            new_crawled = bundle.select(
-                *[f.name for f in schema.CRAWLED.fields]
-            )
+            new_crawled = bundle.select(*delta_cols)
             candidates = self._candidates(bundle, link_ok)
             per_job = bundle.groupBy("job_id").agg(
                 F.count("*").alias("n_fetched"),
@@ -831,8 +832,7 @@ class CrawlEngine:
                 keyed = candidates.withColumn("_th", host_c).withColumn(
                     "_tt", tmpl_c
                 )
-                record(
-                    "trap_drops",
+                drops = (
                     keyed.join(F.broadcast(capped),
                                ["job_id", "_th", "_tt"], "left_semi")
                     .groupBy(
@@ -841,8 +841,11 @@ class CrawlEngine:
                         F.col("_tt").alias("template"),
                     )
                     .agg(F.count("*").alias("dropped"))
-                    .withColumn("superstep", F.lit(step).cast("int")),
+                    .withColumn("superstep", F.lit(step).cast("int"))
+                    .localCheckpoint(eager=True)
                 )
+                trap_parts.append(drops)
+                retained.append(drops)
                 candidates = keyed.join(
                     F.broadcast(capped), ["job_id", "_th", "_tt"],
                     "left_anti",
@@ -1032,35 +1035,19 @@ class CrawlEngine:
 
             seen_delta = new_frontier_rows.select("job_id", "url", "ord", "depth")
             if redir_finals is not None:
-                # record followed/failed chains (never silent), and add
-                # FINAL urls to the seen set: after A 301→ B was
+                # add FINAL urls to the seen set: after A 301→ B was
                 # fetched, a later enqueue of B would re-fetch content
                 # we already hold. (A B already sitting in the frontier
                 # still drains — eventual dedup, same as any crawler's
                 # enqueue-time check.) The anti-join keeps seen a set;
                 # its left side is batch-bounded, the per-step cost the
                 # candidate dedup already pays.
-                record(
-                    "redirects",
-                    bundle.filter(
-                        (F.col("n_hops") > 0) | (~F.col("redirect_ok"))
-                    ).select(
-                        "job_id", "url", "final_url", "n_hops",
-                        "redirect_ok", "superstep",
-                    ),
-                )
                 redir_seen = redir_finals.join(
                     seen.select("job_id", "url"),
                     ["job_id", "url"],
                     "left_anti",
                 )
                 seen_delta = seen_delta.unionByName(redir_seen)
-            if snap is not None:
-                record("revalidated", bundle.filter(F.col("reused"))
-                       .select("job_id", "url", "superstep"))
-            if self.honor_meta_robots:
-                record("noindexed", bundle.filter(F.col("robots_noindex"))
-                       .select("job_id", "url", "superstep"))
             if self._seen_filter is not None:
                 # the delta includes redirect FINALS (seen_delta, not
                 # just the frontier rows) so the prefilter agrees with
@@ -1172,10 +1159,15 @@ class CrawlEngine:
                 )
             step += 1
 
-        crawled = _union_all(spark, schema.CRAWLED, crawled_parts)
+        crawled_rows = _union_all(spark, T.StructType(
+            schema.CRAWLED.fields
+            + [T.StructField(c, _FLAG_TYPES[c]) for c in flag_cols]
+        ), crawled_parts)
         # dense fetch order per job (the reference's pop counter)
         w_fetch = Window.partitionBy("job_id").orderBy("ord")
-        crawled = crawled.withColumn("fetch_ord", F.row_number().over(w_fetch) - 1)
+        crawled = crawled_rows.select(
+            *[f.name for f in schema.CRAWLED.fields]
+        ).withColumn("fetch_ord", F.row_number().over(w_fetch) - 1)
         # final state snapshots + bloom are still live (job_state is
         # returned; the last frontier/bloom would pin blocks forever
         # otherwise) — hand them to the result for explicit release
@@ -1191,17 +1183,30 @@ class CrawlEngine:
         # pending_release — hand those over too (releasing the parent
         # of a never-run lazy checkpoint is safe: nothing computes it)
         retained.extend(pending_release)
+
+        def flagged(on: bool, cond, *cols) -> Optional[DataFrame]:
+            """The (job_id, url, *cols, superstep) crawled rows where
+            ``cond`` holds; None when the feature is off."""
+            if not on:
+                return None
+            return crawled_rows.filter(cond).select(
+                "job_id", "url", *cols, "superstep")
+
         return CrawlResultTables(
             crawled=crawled, seen=seen,
             metrics=_union_all(spark, schema.METRICS, metrics_parts),
             supersteps=step - start_step, job_state=self._job_state_df(js),
             checkpoints=retained,
             opic=opic_cash,
-            **{
-                name: _union_all(spark, ddl, side_parts[name])
-                if name in side_parts else None
-                for name, ddl in _SIDE_TABLE_DDL.items()
-            },
+            trap_drops=(_union_all(spark, _TRAP_DROPS_DDL, trap_parts)
+                        if self.trap_max_urls is not None else None),
+            redirects=flagged(
+                bool(self._redir_cols),
+                (F.col("n_hops") > 0) | ~F.col("redirect_ok"),
+                "final_url", "n_hops", "redirect_ok"),
+            revalidated=flagged(snap is not None, F.col("reused")),
+            noindexed=flagged(self.honor_meta_robots,
+                              F.col("robots_noindex")),
         )
 
     # -------------------------------------------------------------- drain
@@ -1347,11 +1352,12 @@ class CrawlEngine:
         ).unionByName(too_many)
 
     @staticmethod
-    def _attach_snapshots(fetched: DataFrame, snap: DataFrame) -> DataFrame:
+    def _attach_snapshots(batch: DataFrame, snap: DataFrame) -> DataFrame:
         """Left-attach the prior-crawl snapshot columns
-        (``_snapshot_columns``) to the fetched batch with
-        :func:`hit_miss_join` — the snapshot table is corpus-scale."""
-        return hit_miss_join(fetched, snap, "url", "_su")
+        (``_snapshot_columns``) to the drained batch with
+        :func:`hit_miss_join` — the snapshot table is corpus-scale. The
+        fetch then carries them to the bundle's digest check."""
+        return hit_miss_join(batch, snap, "url", "_su")
 
     def _fetch_live(self, batch: DataFrame) -> DataFrame:
         """Live-mode fetch: the drained batch goes through the
